@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .cacheutil import tracked_cache
+from .localframe import local_frame
 
 
 def percent_rank_map(
@@ -220,8 +221,11 @@ def exact_quantiles(
         (F.col("__offset") + F.col("__prefix")).alias("__cum"),
         "__n",
     )
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(qs, "num long, den long")
+    qdf = local_frame(
+        df.sparkSession,
+        {"num": [n for n, _ in qs], "den": [d for _, d in qs]},
+        "num long, den long",
+    )
     need = F.expr("(num * __n + den - 1) div den")
     return (
         cum.crossJoin(F.broadcast(qdf))

@@ -15,13 +15,12 @@ a daily snapshot partition overwrite (W4).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedupe_latest, sessionize
 from ..quality.checks import duplicate_keys, missing_dates, volume_anomaly
+from ..session import env_positive_int
 from .model import Model, RunContext, TaskGroup
 from .pipeline import Pipeline
 
@@ -693,6 +692,6 @@ def build_warehouse_pipeline(**kwargs) -> Pipeline:
     # 20 s. Pool 6 is the last driver-proven value; the env knob
     # stays for cluster tuning (Airflow-parallelism analogue).
     kwargs.setdefault(
-        "max_parallel", int(os.environ.get("SPARK_GRAFT_DAG_POOL", "6"))
+        "max_parallel", env_positive_int("SPARK_GRAFT_DAG_POOL", 6)
     )
     return Pipeline(name="fullload", groups=_promoted_groups(), **kwargs)

@@ -41,6 +41,7 @@ from .operators import (
     top_k_per_group,
 )
 from .operators.cacheutil import tracked_cache
+from .operators.localframe import local_frame
 from .operators.sessionize import session_rollup
 
 
@@ -773,8 +774,10 @@ def j_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference v_seasonality.sql:28) — broadcast BNLJ is the right
     physical plan for a 3-row interval side at any fact scale."""
     li = load(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
-        [("low", 1, 17), ("mid", 18, 34), ("high", 35, 50)], ["band", "lo", "hi"]
+    bands = local_frame(
+        spark,
+        {"band": ["low", "mid", "high"], "lo": [1, 18, 35], "hi": [17, 34, 50]},
+        "band string, lo long, hi long",
     )
     return (
         range_join(li, bands, "l_quantity", "lo", "hi")
@@ -4725,14 +4728,18 @@ def dd_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     against non-canonical members (broadcast — cluster membership is
     pair-graph-sized), and a broadcast join of per-cluster stats.
     Text never shuffles; the corpus crosses no exchange beyond the
-    input spread."""
+    input spread. The components frame is a window over labels held
+    as a LocalTableScan (or checkpointed by the distributed path),
+    so its three consumers re-read it without a checkpoint of their
+    own: a localCheckpoint here would run its shuffle at build time
+    under AQE."""
     from .textops import tokenize
 
     d = load_spread(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
         d, n=3, num_hashes=64, bands=16, threshold=0.8, verify=True
     )
-    comp = neardup_components(pairs).localCheckpoint(eager=False)
+    comp = neardup_components(pairs)
     toks = d.select(
         "doc_id", F.size(tokenize(F.col("text"))).cast("long").alias("n_tokens")
     )
@@ -5957,48 +5964,36 @@ ORDER BY user_id, valid_from
 """,
 )
 def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 interval history built by the operators/scd2.scd2_merge
-    primitive itself: four weekly activity snapshots (per-user
-    cumulative event / purchase counts — integer attrs, so change
-    detection is exact) merged sequentially, reproducing the
-    reference's snapshot-history semantics
+    """SCD2 interval history over four weekly activity snapshots
+    (per-user cumulative event / purchase counts — integer attrs, so
+    change detection is exact), reproducing the reference's
+    snapshot-history semantics
     (5_master_historical/subscription_historical.sql:2-110) in
-    interval form. The oracle derives the SAME intervals relationally
-    (change rows via LAG, valid_to via LEAD over snapshot dates), so
-    the merge operator's output — not a reimplementation — is
-    hash-compared.
-
-    Scale: each merge shuffles once on the business key and touches
-    only OPEN rows (closed history is filtered before the join). In
-    production each run consumes one increment and WRITES history to
-    storage — the next run reads a materialized table, not a lazy
-    plan. Replaying 4 snapshots in one query reproduces that with
-    the SURVEY §4 materialize-if-reused rule: each intermediate
-    history is cached (its rows feed 3 branches of the next merge —
-    left lazy, the plan re-derives every prior round per branch and
-    balloons to ~41 exchanges; cached it is one InMemoryTableScan
-    per branch). The snapshot SOURCE pays the corpus exactly once:
-    events collapse to (user_id, day) partials in one shuffle, the
-    partials are repartitioned onto the business key and cached, and
-    every per-snapshot cumulative rollup (and each merge's user_id
-    join) reuses that one partitioning — 4 full event scans and
-    their 4 corpus-sized shuffles become 1 at any scale."""
-    return scd2_history_core(load(spark, sf_dir, "events")).orderBy(
+    interval form. Built by the one-pass full-rebuild form
+    (scd2_history_relational), the same builder the nightly
+    master_historical.customer_scd2 runs: one lazy plan that fires no
+    Spark job before the caller's action. The oracle
+    derives the intervals in SQL (change rows via LAG, valid_to via
+    LEAD over snapshot dates); tests pin this form equal to the
+    operators/scd2.scd2_merge replay (scd2_history_core), so the
+    merge operator's semantics stay what the oracle checks."""
+    return scd2_history_relational(load(spark, sf_dir, "events")).orderBy(
         "user_id", "valid_from"
     )
 
 
 def scd2_history_relational(events: DataFrame) -> DataFrame:
-    """Batch/backfill form of scd2_history: the SAME intervals the
-    scd2_merge replay produces (value-equality is what the driver's
-    oracle proves for the registry form, and tests pin this form to
-    the registry output), derived in ONE relational pass — daily
+    """Full-rebuild form of the SCD2 history, built by scd2_history
+    and the nightly master_historical.customer_scd2: the SAME
+    intervals the scd2_merge replay (scd2_history_core) produces —
+    tests pin the two equal — derived in ONE relational pass: daily
     partials x snapshot dates -> cumulative counts -> LAG change
     flags -> LEAD valid_to. This is what a full REBUILD should run
-    at 100 TB: no iterative merge chain (4 sequential jobs + a
-    compile-heavy lineage), just one shuffle on the business key;
-    the incremental nightly run still uses operators/scd2.scd2_merge
-    to consume one increment against stored history."""
+    at 100 TB: no iterative merge chain (4 sequential rounds + a
+    compile-heavy lineage), one lazy plan of three aggregate/window
+    shuffles that fires no job until the caller's action; the
+    incremental nightly run still uses operators/scd2.scd2_merge to
+    consume one increment against stored history."""
     daily = (
         events.select(F.to_date("ts").alias("d"), "user_id", "event_type")
         .groupBy("user_id", "d")
@@ -6045,8 +6040,12 @@ def scd2_history_relational(events: DataFrame) -> DataFrame:
 
 
 def scd2_history_core(events: DataFrame) -> DataFrame:
-    """Unordered core of scd2_history; the nightly layered build
-    feeds it conformed ods.events. Requires: ts, user_id,
+    """The scd2_merge replay of scd2_history's four snapshots, one
+    merge per snapshot as an incremental nightly run would consume
+    them. Kept as the merge side of the duality test that pins
+    scd2_history_relational to the operator's semantics; it fires
+    Spark jobs while it is built (see the checkpoint note below), so
+    no registry query builds with it. Requires: ts, user_id,
     event_type."""
     e = events.select(F.to_date("ts").alias("d"), "user_id", "event_type")
     daily = (
@@ -6084,12 +6083,13 @@ def scd2_history_core(events: DataFrame) -> DataFrame:
             # (150+ nodes by round 4) and Catalyst pays seconds of
             # compile time on the first run even though execution
             # reads the cache.
-            # eager=False: truncation must not EXECUTE at plan-build
-            # time (an eager checkpoint moves the merge work into
-            # DataFrame construction, outside any caller's timing or
-            # retry scope); the wrapper node still keeps the logical
-            # tree linear, and the RDD materializes once on first
-            # action with all three next-round branches sharing it.
+            # eager=False does NOT keep this lazy under AQE: the
+            # checkpoint asks for the physical plan's RDD, and the
+            # adaptive plan runs every shuffle stage to build it, so
+            # each round's merge executes here, at DataFrame
+            # construction (18 jobs at sf0.1). Only the final
+            # stage waits for the first action. That is why
+            # scd2_history builds with scd2_history_relational.
             # coalesce first: each merge UNIONS three branches, so
             # the checkpointed RDD's partition count otherwise sums
             # per round (~32 x rounds — measured 992 tasks by round

@@ -26,8 +26,37 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# Spark's byte-string grammar (JavaUtils.byteStringAs), lower-cased.
+_BYTE_SIZE = re.compile(r"[0-9]+(b|k|kb|m|mb|g|gb|t|tb|p|pb)?")
+
+
+def env_positive_int(name: str, default: int) -> int:
+    """Integer env knob ``name``; a value that is not an integer >= 1
+    raises a ValueError naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name}={raw!r}: expected a positive integer")
+    return value
+
+
+def env_byte_size(name: str, default: str) -> str:
+    """Byte-size env knob ``name`` (``64k``, ``1m``, ``65536``); a value
+    Spark would not parse raises a ValueError naming the variable."""
+    raw = os.environ.get(name, default)
+    if not _BYTE_SIZE.fullmatch(raw.strip().lower()):
+        raise ValueError(f"{name}={raw!r}: expected a byte size such as 64k or 1m")
+    return raw.strip()
+
 
 # Knob defaults chosen for local[N] testing; on a real cluster the
 # submitter overrides cores/memory and shuffle partitions scale with
@@ -50,10 +79,9 @@ _DEFAULT_CONF: dict[str, str] = {
     # (default) the coalesce target is max(bytes/parallelism,
     # minPartitionSize), so at production shuffle sizes the floor
     # never binds — it only restores parallelism where shuffles are
-    # sub-MiB, i.e. test scale.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_FLOOR", "64k"
-    ),
+    # sub-MiB, i.e. test scale. SPARK_GRAFT_AQE_FLOOR overrides it
+    # (see _engine_conf).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -82,6 +110,16 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _engine_conf() -> dict[str, str]:
+    """_DEFAULT_CONF with the env knobs applied, read (and validated)
+    when a session is built or configured rather than at import."""
+    floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    return {
+        **_DEFAULT_CONF,
+        floor: env_byte_size("SPARK_GRAFT_AQE_FLOOR", _DEFAULT_CONF[floor]),
+    }
+
+
 def get_spark(
     app_name: str = "etl_pipelines_spark",
     master: str | None = None,
@@ -99,7 +137,7 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     builder = builder.master(master)
-    conf = dict(_DEFAULT_CONF)
+    conf = _engine_conf()
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -116,7 +154,7 @@ def configure(spark: SparkSession) -> SparkSession:
     conf (master, memory) is out of our hands, but determinism conf
     (timezone, ANSI, AQE) is runtime-settable and must be pinned.
     """
-    for k, v in _DEFAULT_CONF.items():
+    for k, v in _engine_conf().items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.localframe import local_frame
 from .analysis import tokenize
 
 
@@ -664,7 +665,9 @@ def neardup_components(
     - ``<= driver_max_edges``: collect (src, dst) longs and run
       union-find on the driver — exact, O(E α(E)), zero scheduling
       overhead (a distributed fixpoint loop pays several jobs PER
-      ROUND just to move kilobytes).
+      ROUND just to move kilobytes). The labels go back as an Arrow
+      table (operators/localframe), so the result plans as a window
+      over a LocalTableScan: no Python worker reads them back.
     - larger: distributed min-label propagation — every node starts
       labeled with its own id; each round takes the min of its own
       and its neighbors' labels; converges in O(graph diameter)
@@ -695,8 +698,8 @@ def neardup_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for row in edges.toLocalIterator():
-            a, b = row.src, row.dst
+        # One collect: toLocalIterator runs one job per partition.
+        for a, b in edges.collect():
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -704,9 +707,10 @@ def neardup_components(
                 # union by min id keeps component_id = min(doc_id)
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        spark = pairs.sparkSession
-        labels = spark.createDataFrame(
-            [(x, find(x)) for x in parent], schema="src long, comp long"
+        labels = local_frame(
+            pairs.sparkSession,
+            {"src": list(parent), "comp": [find(x) for x in parent]},
+            "src long, comp long",
         )
         return _component_output(labels)
     # localCheckpoint (not just persist) each round: an iterative

@@ -279,23 +279,51 @@ class TestScd2:
         assert a == b
 
     def test_relational_rebuild_equals_merge_replay(self, spark, sf_dir):
-        """The r6 full-rebuild form (queries.scd2_history_relational,
+        """The full-rebuild form (queries.scd2_history_relational,
         one pass: daily partials × snapshot dates → LAG change flags
         → LEAD valid_to) must produce the EXACT interval set the
-        scd2_merge replay produces — the duality the re-layered
-        pipeline relies on (incremental nightly = merge; backfill /
-        full rebuild = relational)."""
+        scd2_merge replay (queries.scd2_history_core) produces — the
+        duality the re-layered pipeline relies on (incremental
+        nightly = merge; backfill / full rebuild and the registry's
+        scd2_history = relational)."""
         from etl_pipelines_spark.queries import (
-            REGISTRY,
             load,
+            scd2_history_core,
             scd2_history_relational,
         )
 
-        merge_form = REGISTRY["scd2_history"].spark(spark, sf_dir)
+        merge_form = scd2_history_core(load(spark, sf_dir, "events"))
         relational = scd2_history_relational(load(spark, sf_dir, "events"))
         a = sorted(map(str, merge_form.collect()))
         b = sorted(map(str, relational.collect()))
         assert a == b and len(a) > 0
+
+    def test_registry_build_fires_no_merge_jobs(self, spark, sf_dir):
+        """Building REGISTRY["scd2_history"] must leave the work to the
+        caller's action: the only job in the build's group is the
+        parquet footer read of ``load``. The scd2_merge replay fired
+        one job per shuffle stage of every round at build time
+        (localCheckpoint(eager=False) still runs the adaptive plan's
+        stages)."""
+        from etl_pipelines_spark.queries import REGISTRY
+
+        sc = spark.sparkContext
+        group = "test-scd2-history-build"
+        sc.setJobGroup(group, "scd2_history build")
+        try:
+            REGISTRY["scd2_history"].spark(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        stages = [
+            st.getStageInfo(s).name
+            for j in jobs
+            for s in st.getJobInfo(j).stageIds
+        ]
+        assert len(jobs) <= 1, stages
+        assert all(n.startswith("parquet at ") for n in stages), stages
 
     def test_merge_replay_partition_count_bounded(self, spark, sf_dir):
         """Each scd2_merge round UNIONS three branches, so the

@@ -284,6 +284,17 @@ class TestNeardupComponents:
         )
         assert drv == dist
 
+    def test_driver_path_labels_plan_as_local_table_scan(self, spark):
+        # The union-find labels go back to Spark as an Arrow table: a
+        # LocalTableScan read in the JVM, not a pickled Python RDD that
+        # a Python worker decodes in every task.
+        from etl_pipelines_spark.textops import neardup_components
+
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
+        plan = neardup_components(pairs)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "Scan ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
 
 class TestSampling:
     """Deterministic hash-mod splits (textops/sampling.py)."""
