@@ -26,10 +26,8 @@ if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
         else _REPO
     )
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-from etl_pipelines_spark import session as _session  # noqa: E402
 from etl_pipelines_spark.queries import REGISTRY  # noqa: E402
+from etl_pipelines_spark.session import get_spark  # noqa: E402
 
 # Ordered JVM-relational first, Python-worker-heavy (Arrow batches,
 # numpy sketching) last: the python workers' spawn cost and memory
@@ -107,63 +105,8 @@ HEADLINE = [
 ]
 
 
-_SENTINEL = os.path.join(_REPO, "BENCH_RUNNING")
-
-
-def _quiet_box_gate() -> bool:
-    """Mechanical bench/sweep mutual exclusion (VERDICT r11 #2 —
-    three consecutive BENCH_rN.json carried analyzer-sweep
-    background). Write the BENCH_RUNNING sentinel, then refuse to
-    measure until every analyze_reference.py process either EXITS or
-    acks a pause (the sweep's _bench_gate() writes BENCH_RUNNING.ack
-    and sleeps between statements while the sentinel exists). An
-    analyzer alive without a fresh ack after the grace period is a
-    hard failure — a contaminated bench is worse than no bench.
-    Returns whether an analyzer is paused (stamped into the headline
-    JSON so the artifact discloses the box state)."""
-    import subprocess
-
-    with open(_SENTINEL, "w") as f:
-        f.write(str(os.getpid()))
-    ack = _SENTINEL + ".ack"
-    deadline = time.time() + 180
-    while True:
-        try:
-            out = subprocess.run(
-                ["ps", "-eo", "args"], capture_output=True, text=True
-            ).stdout
-        except OSError:
-            out = ""
-        procs = [
-            ln for ln in out.splitlines()
-            if "analyze_reference.py" in ln
-        ]
-        if not procs:
-            return False
-        if os.path.exists(ack) and (
-            os.path.getmtime(ack) >= os.path.getmtime(_SENTINEL)
-        ):
-            return True
-        if time.time() > deadline:
-            _clear_sentinel()
-            raise SystemExit(
-                "bench refused to measure: analyze_reference.py is "
-                "alive without a pause-ack: " + procs[0][:160]
-            )
-        time.sleep(3)
-
-
-def _clear_sentinel() -> None:
-    try:
-        os.unlink(_SENTINEL)
-    except OSError:
-        pass
-
-
 def main() -> None:
-    analyzer_paused = _quiet_box_gate()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Scale-bench hooks (tools/bench_scale10.py): restrict to a
     # comma-separated query subset / fewer reps / skip the pipeline.
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
@@ -181,22 +124,20 @@ def main() -> None:
     # Sequential mode gives each model the whole machine: its wall
     # time is attributable, so slopes localize honestly.
     rebuild_seq = os.environ.get("SPARK_GRAFT_REBUILD_MODE") == "seq"
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("etl_pipelines_spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.scheduler.mode", "FAIR")
-        .getOrCreate()
+    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions: the
+    # engine defaults. The engine's 128 MiB splits are sized for
+    # 100 TB scans; sf0.1 files are single-digit MiB, which would hand
+    # each fact scan to one core. Split small so local[N] fans out.
+    spark = get_spark(
+        "etl_pipelines_spark-bench",
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+            "spark.sql.files.openCostInBytes": str(256 * 1024),
+        },
     )
-    _session.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    # The engine default (128 MiB splits) is sized for 100 TB scans;
-    # sf0.1 files are single-digit MiB, which would hand each fact
-    # scan to one core. Split small so local[N] actually fans out.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(256 * 1024))
 
     # Warm-up: trivial scan to absorb JVM/codegen/first-stage cost.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
@@ -342,11 +283,6 @@ def main() -> None:
         # InMemoryRelation. Those rows step UP vs r12 by construction;
         # see OPTIMIZATION_r13.md for the old-vs-new methodology pair.
         "cache_released_between_reps": True,
-        # quiet-box disclosure: False = no analyzer process existed;
-        # True = one existed but was sentinel-paused for the whole
-        # measurement (it sleeps between statements; residual JVM
-        # footprint only). A live unpaused analyzer aborts the bench.
-        "analyzer_paused": analyzer_paused,
     }
     # The headline line must stay small enough for the driver's tail
     # capture (r7's BENCH_r07.json truncated, parsed=null, once the
@@ -365,7 +301,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    try:
-        main()
-    finally:
-        _clear_sentinel()
+    main()

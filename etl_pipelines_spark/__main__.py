@@ -21,19 +21,15 @@ import datetime as dt
 import sys
 
 
-def _spark(cpus: str = "8"):
-    from pyspark.sql import SparkSession
+def _spark():
+    from .session import get_spark
 
-    from .session import configure
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("etl_pipelines_spark-cli")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    # Shuffle partitions stay the engine's $SPARK_GRAFT_CPUS default.
+    spark = get_spark(
+        "etl_pipelines_spark-cli",
+        master="local[8]",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 

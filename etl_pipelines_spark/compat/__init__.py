@@ -49,17 +49,19 @@ text as-is:
   placeholders that fail at analysis, not silently
 - double-quoted identifiers via spark.sql.ansi.doubleQuotedIdentifiers
 
-Sweep evidence (tools/transpile_reference.py over all 1,327
-reference SQL files): 4,654 / 4,833 statements (96.3%) transpile and
-parse; the residual is dominated by statements that are invalid in
+Coverage evidence: ``TRANSPILE_COVERAGE.json`` at the repo root is a
+frozen historical record of a parse-validation sweep over all 1,327
+reference SQL files: 4,654 / 4,833 statements (96.3%) transpiled and
+parsed; the residual was dominated by statements that are invalid in
 the source dialect too (trailing commas before FROM, CASE without
 WHEN, doubled THEN/ON, statements glued without ``;``) plus template
-holes inside literals that cannot be parameterized faithfully.
+holes inside literals that cannot be parameterized faithfully. The
+sweep tool is gone with the reference tree, so the file is no longer
+regenerated.
 
 Entry points: ``transpile(sql)``, ``install(spark)``,
-``run_sql(spark, sql)``. See ``tools/transpile_reference.py`` for the
-parse-validation sweep over the reference tree; driver-checked
-end-to-end by the ``compat_redshift_script`` registry query.
+``run_sql(spark, sql)``; driver-checked end-to-end by the
+``compat_redshift_script`` registry query.
 """
 from .transpile import (  # noqa: F401
     TranspileError,

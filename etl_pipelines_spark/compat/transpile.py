@@ -1184,14 +1184,6 @@ def _rw_refresh_mv(toks: list[Tok]) -> list[Tok]:
     return toks
 
 
-# How CREATE TEMP TABLE maps. "view" (default): CREATE OR REPLACE
-# TEMPORARY VIEW -- zero-copy, read-only stage, the engine-idiomatic
-# form. "table": a real (managed, default-db) table so downstream
-# INSERT/DELETE statements against the stage also resolve -- used by
-# the analysis sweep (tools/analyze_reference.py).
-_TEMP_AS = "view"
-
-
 def _rw_create_like(toks: list[Tok]) -> list[Tok]:
     """Redshift clone DDL (18 sites, all delta-load staging --
     mediamarkt_price_data.sql et al.):
@@ -1238,11 +1230,6 @@ def _rw_create_like(toks: list[Tok]) -> list[Tok]:
     name = _render(toks[ti + 1 : op]).strip()
     if is_temp:
         name = name.split(".")[-1]  # temp views are single-part
-        if _TEMP_AS == "table":
-            return tokenize(
-                f"CREATE TABLE {name} USING parquet AS "
-                f"SELECT * FROM {src} WHERE 1 = 0"
-            )
         return tokenize(
             f"CREATE OR REPLACE TEMPORARY VIEW {name} AS "
             f"SELECT * FROM {src} WHERE 1 = 0"
@@ -1708,11 +1695,11 @@ def _rw_ddl(toks: list[Tok]) -> list[Tok]:
                         and _word_is(toks[m], "AS")
                         for m in range(k + 1, len(toks))
                     )
-                    if _TEMP_AS == "table" or not has_as:
+                    if not has_as:
                         # no top-level AS = a typed column-definition
                         # temp table (Customer Data Tape.sql) — a
                         # VIEW cannot carry a bare column list, so
-                        # it stays a real table in view mode too
+                        # it stays a real table
                         out.append(Tok("word", "CREATE"))
                         out.append(Tok("ws", " "))
                         out.append(Tok("word", "TABLE"))
@@ -2462,12 +2449,11 @@ def _rw_qid_backtick(toks: list[Tok]) -> list[Tok]:
     literals are single-quoted), so the mapping is lossless — and it
     frees the consuming session from `spark.sql.ansi.
     doubleQuotedIdentifiers`, which only applies under ANSI mode.
-    That coupling forced the analysis sweep to run ANSI-on (r9,
-    measured), which made Spark reject the string-typed arithmetic /
-    comparisons Redshift's implicit-cast matrix allows — the entire
-    DATATYPE_MISMATCH residual tier of the r11 full-corpus artifact.
-    With identifiers backticked the sweep runs non-ANSI and inherits
-    Spark's lenient implicit casts, which are far closer to
+    ANSI-on makes Spark reject the string-typed arithmetic /
+    comparisons Redshift's implicit-cast matrix allows (the whole
+    DATATYPE_MISMATCH residual of the r11 full-corpus measurement).
+    With identifiers backticked, run_sql's non-ANSI engine session
+    inherits Spark's lenient implicit casts, which are far closer to
     Redshift's."""
     out = []
     for t in toks:
@@ -2523,302 +2509,10 @@ _PASSES = (
 )
 
 
-def lateral_alias_candidates(sql: str) -> list[str]:
-    """Select-list alias names defined anywhere in the statement, in
-    definition order (dedup'd) — the candidate set for the UNNAMED
-    lateral-alias error (LATERAL_COLUMN_ALIAS_IN_GROUP_BY does not
-    name the alias; the caller tries inlining one candidate at a
-    time and re-analyzes). Only explicit ``AS alias`` definitions
-    are enumerated: implicit aliases are also legal def sites for
-    the named path, but as blind candidates they over-trigger. Words
-    that are not really select-item aliases (e.g. the type in
-    ``CAST(x AS int)``) slip through here but are harmless: the
-    inliner requires a definition at a select-item tail, finds none,
-    and returns None."""
-    toks = tokenize(sql)
-    out: list[str] = []
-    for i, t in enumerate(toks):
-        if not _word_is(t, "AS"):
-            continue
-        n = _next_sig(toks, i)
-        if n < len(toks) and toks[n].kind == "word":
-            name = toks[n].text.lower()
-            if name not in out:
-                out.append(name)
-    return out
-
-
-def _lateral_block_repls(
-    toks: list, alias: str, list_only: bool = False
-) -> list[dict[int, list]]:
-    """Core of the lateral-alias inliner: for each SELECT block that
-    defines ``alias`` in its select list and references it bare
-    elsewhere, a {use-token-index -> definition-expression tokens}
-    replacement map. One map per block, so callers can apply the
-    rewrite ONE SCOPE AT A TIME — Spark's LATERAL_COLUMN_ALIAS error
-    only proves the alias shadows no real column in the scope that
-    raised; a different block's FROM may legitimately supply a real
-    column of the same name (r10 ADVICE), so a statement-wide rewrite
-    there would change semantics."""
-    low = alias.lower()
-
-    def is_alias_tok(t: Tok) -> bool:
-        return (t.kind == "word" and t.text.lower() == low) or (
-            t.kind == "qid" and t.text[1:-1].lower() == low
-        )
-
-    # token paren depths
-    depths: list[int] = []
-    d = 0
-    for t in toks:
-        if t.kind == "punct" and t.text == "(":
-            depths.append(d)
-            d += 1
-        elif t.kind == "punct" and t.text == ")":
-            d -= 1
-            depths.append(d)
-        else:
-            depths.append(d)
-
-    # SELECT blocks: (sel_idx, from_idx|None, end_idx, depth).
-    # A block ends at the ')' that closes its depth, at a same-depth
-    # sibling SELECT (UNION arm — lateral aliases do not cross set
-    # operators), or at end of statement.
-    blocks: list[tuple[int, int | None, int, int]] = []
-    stack: list[list] = []  # [sel_idx, depth, from_idx|None]
-    for i, t in enumerate(toks):
-        if t.kind == "punct" and t.text == ")":
-            while stack and stack[-1][1] > depths[i]:
-                s = stack.pop()
-                blocks.append((s[0], s[2], i, s[1]))
-        elif _word_is(t, "SELECT"):
-            while stack and stack[-1][1] == depths[i]:
-                s = stack.pop()
-                blocks.append((s[0], s[2], i, s[1]))
-            stack.append([i, depths[i], None])
-        elif _word_is(t, "FROM") and stack and stack[-1][1] == depths[i] \
-                and stack[-1][2] is None:
-            stack[-1][2] = i
-    while stack:
-        s = stack.pop()
-        blocks.append((s[0], s[2], len(toks), s[1]))
-
-    # replacements: use-token index -> expression token span, one map
-    # per block (plus that block's definition-alias token index);
-    # `claimed` dedups across nested/sibling block scans
-    block_repls: list[tuple[dict[int, list[Tok]], int]] = []
-    claimed: set[int] = set()
-    for sel, frm, end, bd in blocks:
-        repl: dict[int, list[Tok]] = {}
-        if frm is None:
-            continue
-        # select-list items, split at commas at the block's depth
-        items: list[tuple[int, int]] = []
-        start = sel + 1
-        for k in range(sel + 1, frm):
-            tk = toks[k]
-            if tk.kind == "punct" and tk.text == "," and depths[k] == bd:
-                items.append((start, k))
-                start = k + 1
-        items.append((start, frm))
-
-        def_span = None
-        def_tok = -1  # token index of the defining alias name
-        expr_toks: list[Tok] | None = None
-        alias_positions: set[int] = set()  # (implicit) alias tokens
-        for lo, hi in items:
-            sig = [k for k in range(lo, hi) if _is_sig(toks[k])]
-            if len(sig) < 2:
-                continue
-            last = sig[-1]
-            prev = sig[-2]
-            if not is_alias_tok(toks[last]):
-                # still record foreign alias positions? only same
-                # name matters, and is_alias_tok filters that
-                continue
-            if _word_is(toks[prev], "AS"):
-                alias_positions.add(last)
-                if def_span is None:
-                    def_span = (lo, hi)
-                    def_tok = last
-                    expr_toks = [
-                        toks[k] for k in range(lo, prev)
-                    ]
-            elif toks[prev].kind in ("word", "num", "str", "qid") or (
-                toks[prev].kind == "punct" and toks[prev].text == ")"
-            ):
-                # implicit alias: `expr alias` with no AS
-                alias_positions.add(last)
-                if def_span is None:
-                    def_span = (lo, hi)
-                    def_tok = last
-                    expr_toks = [toks[k] for k in range(lo, last)]
-        if def_span is None or expr_toks is None:
-            continue
-        # drop leading DISTINCT/ALL and surrounding ws/comments
-        while expr_toks and (
-            not _is_sig(expr_toks[0])
-            or _word_is(expr_toks[0], "DISTINCT", "ALL")
-        ):
-            expr_toks.pop(0)
-        while expr_toks and not _is_sig(expr_toks[-1]):
-            expr_toks.pop()
-        if not expr_toks:
-            continue
-
-        # use sites: bare references in the block, outside the
-        # defining item, outside nested sub-SELECT scopes, not
-        # qualified, not a call, not an alias position
-        scan_end = frm if list_only else end
-        k = sel + 1
-        while k < scan_end:
-            t = toks[k]
-            if t.kind == "punct" and t.text == "(":
-                n = _next_sig(toks, k)
-                if n < scan_end and _word_is(toks[n], "SELECT"):
-                    # skip the whole nested subquery: its own scope
-                    dd = 0
-                    while k < scan_end:
-                        if toks[k].kind == "punct" and toks[k].text == "(":
-                            dd += 1
-                        elif toks[k].kind == "punct" and toks[k].text == ")":
-                            dd -= 1
-                            if dd == 0:
-                                break
-                        k += 1
-                    k += 1
-                    continue
-            if (
-                is_alias_tok(t)
-                and not (def_span[0] <= k < def_span[1])
-                and k not in alias_positions
-                and k not in claimed
-            ):
-                p = _prev_sig(toks, k)
-                n = _next_sig(toks, k)
-                prev_t = toks[p] if p >= 0 else None
-                next_t = toks[n] if n < len(toks) else None
-                qualified = (
-                    (prev_t is not None and prev_t.kind == "punct"
-                     and prev_t.text == ".")
-                    or (next_t is not None and next_t.kind == "punct"
-                        and next_t.text == ".")
-                )
-                is_call = (
-                    next_t is not None and next_t.kind == "punct"
-                    and next_t.text == "("
-                )
-                is_def_kw = prev_t is not None and _word_is(
-                    prev_t, "AS", "FROM", "JOIN", "INTO", "TABLE", "VIEW"
-                )
-                if not qualified and not is_call and not is_def_kw:
-                    repl[k] = expr_toks
-                    claimed.add(k)
-            k += 1
-        if repl:
-            block_repls.append((repl, def_tok))
-    return block_repls
-
-
-def _apply_repl(toks: list, repl: dict[int, list]) -> str:
-    out: list[Tok] = []
-    for k, t in enumerate(toks):
-        if k in repl:
-            out.append(Tok("punct", "("))
-            out.extend(repl[k])
-            out.append(Tok("punct", ")"))
-        else:
-            out.append(t)
-    return _render(out)
-
-
-def inline_lateral_alias(
-    sql: str, alias: str, list_only: bool = False
-) -> str | None:
-    """Redshift-style lateral column alias inlining, ERROR-DRIVEN
-    (VERDICT r9 #6): Spark resolves a select-list alias referenced
-    later in the same list but rejects the reference inside window
-    expressions, GROUP BY, and aggregate arguments
-    (``UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_*`` — 69
-    statements in the reference corpus, e.g.
-    Datawarehouse-ETL/0_ods_core/00_inventory_reservations.sql:28
-    ``row_number() over (... order by updated_at desc)`` where
-    ``updated_at`` is the previous select item's alias). Redshift
-    treats the lateral alias as macro expansion of the aliased
-    expression, so inlining the expression at each bare use site is
-    the faithful mechanical rewrite.
-
-    This statement-wide form rewrites EVERY block that defines and
-    uses the alias; Spark's error only proves alias-shadows-nothing
-    in the scope that raised (r10 ADVICE), so analysis-sweep callers
-    should prefer inline_lateral_alias_scoped + a re-analyze gate.
-    Returns the rewritten SQL, or None when no definition+use pair
-    was found (loud-stop: the caller keeps the original error).
-
-    ``list_only=True`` restricts use-site replacement to the select
-    list itself (not GROUP BY/HAVING/window clauses after FROM) —
-    the conservative mode for the UNNAMED
-    LATERAL_COLUMN_ALIAS_IN_GROUP_BY error, whose root cause is an
-    intra-list lateral chain (``x+1 AS s, s*2 AS r ... GROUP BY r``:
-    the GROUP BY alias itself is supported, its lateral EXPANSION is
-    not)."""
-    toks = tokenize(sql)
-    repls = _lateral_block_repls(toks, alias, list_only)
-    if not repls:
-        return None
-    merged: dict[int, list] = {}
-    for r, _d in repls:
-        merged.update(r)
-    return _apply_repl(toks, merged)
-
-
-def inline_lateral_alias_scoped(
-    sql: str, alias: str, list_only: bool = False
-) -> list[str]:
-    """Per-block variants of inline_lateral_alias (r10 ADVICE #2):
-    one rewritten statement per SELECT block that defines+uses the
-    alias, each touching ONLY that block. The caller re-analyzes each
-    variant and commits the first whose LATERAL_COLUMN_ALIAS error
-    disappears — a variant rewriting the wrong scope (where the bare
-    name binds to a real FROM column and raised nothing) leaves the
-    error in place and is discarded, so the wrong-scope semantic
-    corruption the statement-wide form risked cannot be committed."""
-    toks = tokenize(sql)
-    return [
-        _apply_repl(toks, r)
-        for r, _d in _lateral_block_repls(toks, alias, list_only)
-    ]
-
-
-def rename_lateral_def(
-    sql: str, alias: str, new_name: str, list_only: bool = False
-) -> list[str]:
-    """Offender-probe variants (r10 ADVICE #1's bind check): for each
-    SELECT block that defines+uses ``alias``, the statement with that
-    block's DEFINITION renamed to ``new_name`` and every use left
-    alone. Analyzing a variant discriminates how the bare uses bind:
-    a TRUE lateral offender's uses lose their definition and the
-    error becomes UNRESOLVED_COLUMN on ``alias``; uses that bind to a
-    real FROM column are unaffected and the original error persists —
-    such a candidate must not be inlined (the rewrite would change
-    semantics in both Redshift and Spark, where the real column wins)."""
-    toks = tokenize(sql)
-    out: list[str] = []
-    for _r, def_tok in _lateral_block_repls(toks, alias, list_only):
-        if def_tok < 0:
-            continue
-        nt = list(toks)
-        nt[def_tok] = Tok("word", new_name)
-        out.append(_render(nt))
-    return out
-
-
-def transpile(sql: str, temp_tables: str = "view") -> str:
+def transpile(sql: str) -> str:
     """Rewrite one Redshift-dialect statement (or script) to Spark
     SQL. Raises TranspileError on constructs that cannot be rewritten
-    faithfully. ``temp_tables="table"`` maps CREATE TEMP TABLE to a
-    real managed table instead of a temp view (writable stage -- the
-    analysis sweep's mode).
+    faithfully.
 
     Apply ONCE: datetime-format translation is not idempotent (the
     Java codes it emits -- 'MM/dd hh:mm a' -- still look like
@@ -2826,15 +2520,10 @@ def transpile(sql: str, temp_tables: str = "view") -> str:
     statement exactly once. Corpus measurement: 5,970/5,995
     reference statements are bit-identical under double-transpile;
     all 25 diffs are this datetime-format shape."""
-    global _TEMP_AS
-    _TEMP_AS = temp_tables
-    try:
-        toks = tokenize(sql)
-        for p in _PASSES:
-            toks = p(toks)
-        return _render(toks)
-    finally:
-        _TEMP_AS = "view"
+    toks = tokenize(sql)
+    for p in _PASSES:
+        toks = p(toks)
+    return _render(toks)
 
 
 def split_statements(sql: str) -> list[str]:

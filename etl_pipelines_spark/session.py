@@ -106,17 +106,20 @@ _DEFAULT_CONF: dict[str, str] = {
     # skipped on a live session.
     "spark.scheduler.mode": "FAIR",
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
 }
 
 
 def _engine_conf() -> dict[str, str]:
     """_DEFAULT_CONF with the env knobs applied, read (and validated)
-    when a session is built or configured rather than at import."""
+    when a session is built or configured rather than at import.
+    Shuffle partitions follow ``SPARK_GRAFT_CPUS`` (default 32)."""
     floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     return {
         **_DEFAULT_CONF,
         floor: env_byte_size("SPARK_GRAFT_AQE_FLOOR", _DEFAULT_CONF[floor]),
+        "spark.sql.shuffle.partitions": str(
+            env_positive_int("SPARK_GRAFT_CPUS", 32)
+        ),
     }
 
 
@@ -132,12 +135,10 @@ def get_spark(
     (where ``master`` is supplied by spark-submit and this argument is
     left None with an existing session already active).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name)
-    if master is None:
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
     conf = _engine_conf()
+    if master is None:
+        master = f"local[{conf['spark.sql.shuffle.partitions']}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -4,7 +4,7 @@ Two tiers: text-level rewrite checks (fast, no session) and
 execution checks that run transpiled Redshift-dialect SQL against
 real temp views and assert VALUES, not just parses. The dialect
 constructs covered mirror the reference's usage inventory
-(tools/transpile_reference.py sweep): QUALIFY, UPDATE ... FROM,
+(the frozen TRANSPILE_COVERAGE.json sweep): QUALIFY, UPDATE ... FROM,
 DELETE ... USING, CREATE TEMP TABLE (LIKE ...), WITH NO SCHEMA
 BINDING, ``~``-family operators, AT TIME ZONE, quoted datetime
 units, JSON_EXTRACT_PATH_TEXT, TO_CHAR, IDENTITY columns, Jinja /
@@ -746,174 +746,6 @@ class TestTrinoDialect:
         rows = sorted((r.id, r.c) for r in spark.sql(out).collect())
         assert rows == [(1, "x"), (1, "y")]
 
-    def test_inline_lateral_alias_window_value_matches_duckdb(self, spark):
-        """VERDICT r9 #6: Spark rejects a select-list alias inside a
-        window expression (Redshift allows it, as macro expansion).
-        The inline rewrite must make Spark produce exactly the rows
-        DuckDB (which supports lateral aliases natively) returns for
-        the ORIGINAL statement."""
-        import duckdb
-        import pytest
-
-        from etl_pipelines_spark.compat.transpile import (
-            inline_lateral_alias,
-        )
-
-        sql = (
-            "SELECT id, coalesce(x, id) AS u, row_number() OVER "
-            "(PARTITION BY g ORDER BY u DESC, id) AS rn FROM lat_t"
-        )
-        spark.sql(
-            "create or replace temp view lat_t as select * from values "
-            "(1, 5, 'a'), (2, 3, 'a'), (3, cast(null as int), 'b') "
-            "as v(id, x, g)"
-        )
-        with pytest.raises(Exception, match="LATERAL_COLUMN_ALIAS"):
-            spark.sql(sql).collect()
-        out = inline_lateral_alias(sql, "u")
-        assert out is not None and "ORDER BY (coalesce(x, id)) DESC" in out, out
-        got = sorted(tuple(r) for r in spark.sql(out).collect())
-        con = duckdb.connect()
-        con.execute(
-            "create table lat_t as select * from (values "
-            "(1, 5, 'a'), (2, 3, 'a'), (3, NULL, 'b')) t(id, x, g)"
-        )
-        want = sorted(tuple(r) for r in con.execute(sql).fetchall())
-        assert got == want
-
-    def test_inline_lateral_alias_implicit_alias_and_qualified_use(self):
-        """Implicit (no-AS) aliases are definitions too; qualified
-        references and other tables' columns stay untouched."""
-        from etl_pipelines_spark.compat.transpile import (
-            inline_lateral_alias,
-        )
-
-        sql = (
-            "SELECT a + b total, max(t.total) OVER (PARTITION BY "
-            "total) m FROM t"
-        )
-        out = inline_lateral_alias(sql, "total")
-        # the bare use inlines; the qualified t.total does not; the
-        # defining alias position survives
-        assert "PARTITION BY (a + b)" in out, out
-        assert "max(t.total)" in out, out
-        assert "a + b total" in out, out
-
-    def test_inline_lateral_alias_groupby_chain_list_only(self, spark):
-        """The UNNAMED LATERAL_COLUMN_ALIAS_IN_GROUP_BY shape: GROUP
-        BY references an alias whose expression contains another
-        lateral alias. Candidate-walk + list_only inlining must
-        rewrite only the intra-list chain and make the statement
-        produce the Redshift macro-expansion values. (DuckDB cannot
-        oracle THIS shape: its lateral aliases bind in WHERE/GROUP
-        BY/HAVING but not inside other select items, so the expected
-        rows are hand-expanded.)"""
-        import pytest
-
-        from etl_pipelines_spark.compat.transpile import (
-            inline_lateral_alias,
-            lateral_alias_candidates,
-        )
-
-        sql = (
-            "SELECT x + 1 AS s, s * 2 AS r, count(*) AS c "
-            "FROM lat_g GROUP BY s, r"
-        )
-        spark.sql(
-            "create or replace temp view lat_g as select * from values "
-            "(1, 5), (2, 5), (3, 7) as v(id, x)"
-        )
-        with pytest.raises(Exception, match="LATERAL_COLUMN_ALIAS"):
-            spark.sql(sql).collect()
-        cands = lateral_alias_candidates(sql)
-        assert cands[0] == "s", cands
-        out = None
-        for a in cands:
-            out = inline_lateral_alias(sql, a, list_only=True)
-            if out:
-                break
-        # only the intra-list use inlines; GROUP BY keeps the alias
-        assert "(x + 1) * 2 AS r" in out.replace("( x + 1 )", "(x + 1)"), out
-        assert "GROUP BY s, r" in out, out
-        got = sorted(tuple(r) for r in spark.sql(out).collect())
-        assert got == [(6, 12, 2), (8, 16, 1)]
-
-    def test_resolve_lateral_skips_real_column_candidate(self, spark):
-        """r10 ADVICE #1: the unnamed candidate walk must NOT commit
-        a rewrite for an alias whose bare uses bind to a real column
-        (`x*9` stays `x*9`, binding to column x in both Redshift and
-        Spark) — only the true offending chain (s -> r) inlines, and
-        the probe gate verifies the rewrite removed the error."""
-        import sys
-
-        sys.path.insert(0, "tools")
-        from analyze_reference import _resolve_lateral
-
-        spark.createDataFrame([(10, 5)], "x int, a int") \
-            .createOrReplaceTempView("lat_adv1")
-        sql = (
-            "SELECT x+1 AS x, x*9 AS z, a+1 AS s, s*2 AS r, "
-            "count(*) AS n FROM lat_adv1 GROUP BY x+1, x*9, a+1, r"
-        )
-        import pytest
-
-        with pytest.raises(Exception, match="LATERAL_COLUMN_ALIAS"):
-            spark.sql(sql).collect()
-        nt = _resolve_lateral(spark, "", sql, "LATERAL_COLUMN_ALIAS_IN_GROUP_BY")
-        assert nt is not None
-        assert "(x+1)*9" not in nt.replace(" ", ""), nt
-        assert "(a+1)*2" in nt.replace(" ", ""), nt
-        row = spark.sql(nt).collect()[0]
-        # real-column binding preserved: z = 10*9, r = (5+1)*2
-        assert (row.z, row.r) == (90, 12)
-
-    def test_resolve_lateral_scoped_to_erroring_block(self, spark):
-        """r10 ADVICE #2: a window error on the OUTER block's alias
-        must not rewrite an inner subquery's same-named bare use that
-        legitimately binds to the inner FROM's real column."""
-        import sys
-
-        sys.path.insert(0, "tools")
-        from analyze_reference import _resolve_lateral
-
-        spark.createDataFrame([(1, 100)], "c int, u int") \
-            .createOrReplaceTempView("lat_adv2")
-        sql = (
-            "SELECT c2 * 2 AS u, row_number() OVER (ORDER BY u) AS rn "
-            "FROM (SELECT u + 1 AS v, c AS c2 FROM lat_adv2) s"
-        )
-        msg = (
-            "[UNSUPPORTED_FEATURE.LATERAL_COLUMN_ALIAS_IN_WINDOW] "
-            "lateral column alias `u` in window expression"
-        )
-        nt = _resolve_lateral(spark, "", sql, msg)
-        assert nt is not None
-        assert "(u)+1" not in nt.replace(" ", ""), nt
-        assert "u + 1 AS v" in nt, nt
-        row = spark.sql(nt).collect()[0]
-        assert row.u == 2
-
-    def test_inline_lateral_alias_scoped_per_block(self):
-        """inline_lateral_alias_scoped returns one variant per block,
-        each touching only its own block; the merged statement-wide
-        form equals the old inline_lateral_alias behavior."""
-        from etl_pipelines_spark.compat.transpile import (
-            inline_lateral_alias,
-            inline_lateral_alias_scoped,
-        )
-
-        sql = (
-            "SELECT a AS u, u + 1 AS w FROM "
-            "(SELECT b AS u, u * 2 AS v FROM t) s"
-        )
-        variants = inline_lateral_alias_scoped(sql, "u")
-        assert len(variants) == 2, variants
-        # each variant rewrites exactly one block
-        assert sum("(a) + 1" in v for v in variants) == 1
-        assert sum("(b) * 2" in v for v in variants) == 1
-        merged = inline_lateral_alias(sql, "u")
-        assert "(a) + 1" in merged and "(b) * 2" in merged
-
     def test_orderless_window_gets_constant_order(self, spark):
         """Redshift allows ROW_NUMBER()/RANK() with no window ORDER
         BY (arbitrary order); Spark hard-requires the clause. The
@@ -1206,20 +1038,6 @@ class TestTrinoDialect:
         )
         row = spark.sql(out).collect()[0]
         assert str(row.v) == "2024-01-01 02:00:00"
-
-    def test_inline_lateral_alias_no_use_returns_none(self):
-        from etl_pipelines_spark.compat.transpile import (
-            inline_lateral_alias,
-        )
-
-        assert inline_lateral_alias(
-            "SELECT a AS u FROM t ORDER BY 1", "u"
-        ) is None
-        # nested subquery scopes are not touched: the inner bare `u`
-        # is the subquery's own concern
-        assert inline_lateral_alias(
-            "SELECT a AS u, (SELECT max(u) FROM s) m FROM t", "u"
-        ) is None
 
     def test_mysql_date_format_codes(self):
         from etl_pipelines_spark.compat.transpile import transpile

@@ -37,3 +37,16 @@ def test_malformed_aqe_floor_names_the_variable(spark, monkeypatch, bad):
     assert session._engine_conf()[FLOOR] == "1M"
     monkeypatch.delenv("SPARK_GRAFT_AQE_FLOOR")
     assert session._engine_conf()[FLOOR] == "64k"
+
+
+@pytest.mark.parametrize("bad", ["eight", "0", "-4", "2.5", ""])
+def test_malformed_cpus_names_the_variable(spark, monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.configure(spark)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        session.get_spark("tests")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert session._engine_conf()["spark.sql.shuffle.partitions"] == "6"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert session._engine_conf()["spark.sql.shuffle.partitions"] == "32"

@@ -8,6 +8,7 @@ evidence complete:
 - the union of every recorded round's window (CORRECTNESS_r*.json at
   the repo root) plus the CURRENT window covers the whole registry —
   no registered query is dark in all rounds;
+- every name rotated out of the window has a green recorded row;
 - every windowed query with an oracle stays hash-comparable (scalar
   output columns only — the driver's pandas canonicalizer crashes on
   array/map/struct cells, r2's one red row).
@@ -24,12 +25,28 @@ from etl_pipelines_spark.queries import REGISTRY, _DRIVER_WINDOW
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _recorded_windows() -> set[str]:
-    names: set[str] = set()
+def _recorded_rows() -> dict[str, list[dict]]:
+    """Every recorded driver row per query name, across all rounds."""
+    rows: dict[str, list[dict]] = {}
     for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         with open(p) as f:
-            names |= set(json.load(f))
-    return names
+            for name, row in json.load(f).items():
+                rows.setdefault(name, []).append(row)
+    return rows
+
+
+def _is_green(name: str, row: dict) -> bool:
+    """A hash match, or, for a query without an oracle, a run that
+    returned rows."""
+    if row.get("hash_match") is True:
+        return True
+    spec = REGISTRY.get(name)
+    return (
+        spec is not None
+        and spec.oracle is None
+        and row.get("err") == "no_oracle"
+        and (row.get("spark_rows") or 0) > 0
+    )
 
 
 class TestDriverWindow:
@@ -46,7 +63,7 @@ class TestDriverWindow:
         """Union coverage: recorded rounds + the current window must
         reach every registered query. Adding a query without putting
         it in the window fails here — that is the point."""
-        covered = _recorded_windows() | set(_DRIVER_WINDOW)
+        covered = set(_recorded_rows()) | set(_DRIVER_WINDOW)
         dark = sorted(n for n in REGISTRY if n not in covered)
         assert dark == [], (
             f"queries with no driver CORRECTNESS row in any round: {dark} — "
@@ -56,14 +73,16 @@ class TestDriverWindow:
 
     def test_rotated_out_names_have_recorded_evidence(self):
         """Anything formerly windowed that is now outside the window
-        must already own a recorded driver row."""
-        recorded = _recorded_windows()
-        current = set(_DRIVER_WINDOW)
-        formerly = recorded - current
-        # every formerly-windowed name either left the registry or
-        # keeps its recorded row by construction; guard the inverse:
-        # a name can only LEAVE the window if it was recorded.
-        assert formerly <= recorded
+        must already own a green recorded driver row."""
+        rows = _recorded_rows()
+        formerly = set(rows) - set(_DRIVER_WINDOW)
+        assert formerly, "no rotated-out names: the check would be vacuous"
+        never_green = sorted(
+            n for n in formerly if not any(_is_green(n, r) for r in rows[n])
+        )
+        assert never_green == [], (
+            f"rotated out of the driver window without a green row: {never_green}"
+        )
 
     def test_windowed_oracle_outputs_are_scalar_only(self, spark, sf_dir):
         """The driver canonicalizes results through pandas
