@@ -105,36 +105,25 @@ HEADLINE = [
 ]
 
 
+# The engine's 128 MiB splits are sized for 100 TB scans; sf0.1 files
+# are single-digit MiB, which would hand each fact scan to one core.
+# Split small so local[N] fans out.
+SMALL_SPLITS = {
+    "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(256 * 1024),
+}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Scale-bench hooks (tools/bench_scale10.py): restrict to a
-    # comma-separated query subset / fewer reps / skip the pipeline.
-    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    headline = (
-        [q for q in HEADLINE if q in set(subset.split(","))]
-        if subset
-        else HEADLINE
-    )
-    reps_override = os.environ.get("SPARK_GRAFT_BENCH_REPS")
-    skip_rebuild = os.environ.get("SPARK_GRAFT_SKIP_REBUILD") == "1"
-    # seq: run the 31-model DAG WITHOUT parallel-group interleaving.
-    # Parallel-mode per-model wall times overlap (threads share the
-    # 32 cores), which inflates per-model SLOPES when sf10 schedules
-    # differently than sf1 — the r8 master_historical ×13 phantom.
-    # Sequential mode gives each model the whole machine: its wall
-    # time is attributable, so slopes localize honestly.
-    rebuild_seq = os.environ.get("SPARK_GRAFT_REBUILD_MODE") == "seq"
     # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions: the
-    # engine defaults. The engine's 128 MiB splits are sized for
-    # 100 TB scans; sf0.1 files are single-digit MiB, which would hand
-    # each fact scan to one core. Split small so local[N] fans out.
+    # engine defaults.
     spark = get_spark(
         "etl_pipelines_spark-bench",
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-            "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(256 * 1024),
+            **SMALL_SPLITS,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -176,14 +165,12 @@ def main() -> None:
         return elapsed
 
     timings: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         spark._jvm.System.gc()
         # Python-tail queries (Arrow batches, numpy sketching) carry
         # worker-pool and allocator noise that best-of-3 does not
         # drown; give them 5 reps.
         reps = 5 if name.split("_")[0] in ("dd", "ann", "ml", "scd2", "emb") else 3
-        if reps_override:
-            reps = int(reps_override)
         times: list[float] = [_timed_rep(name) for _ in range(reps)]
         # Sub-2-s rows: best-of-N at this magnitude still wobbles
         # past ±15% run-to-run (BENCH_VARIANCE r6: 6/53 rows out of
@@ -194,7 +181,7 @@ def main() -> None:
         # scheduling outliers AND against a single lucky min.
         # Rows ≥2 s keep plain best-of-N for cross-round
         # comparability (they were never the noisy ones).
-        if min(times) < 2.0 and not reps_override:
+        if min(times) < 2.0:
             while len(times) < 7:
                 times.append(_timed_rep(name))
             timings[name] = round(sorted(times)[1], 3)
@@ -223,7 +210,7 @@ def main() -> None:
     best = float("inf")
     ok = False
     model_times: dict[str, float] = {}
-    for _rep in range(0 if skip_rebuild else 2):
+    for _rep in range(2):
         wh_dir = tempfile.mkdtemp(prefix="bench_wh_")
         spark._jvm.System.gc()
         try:
@@ -233,9 +220,7 @@ def main() -> None:
                 source_dir=sf_dir,
                 run_date=dt.date(1998, 8, 2),
             )
-            pipe = build_warehouse_pipeline(
-                parallel_within_group=not rebuild_seq
-            )
+            pipe = build_warehouse_pipeline(parallel_within_group=True)
             t0 = time.perf_counter()
             results = pipe.run(ctx)
             elapsed = time.perf_counter() - t0

@@ -33,34 +33,6 @@ class Pipeline:
     parallel_within_group: bool = False
     max_parallel: int = 4
 
-    def levels(self) -> "list[list[TaskGroup]]":
-        """Topological levels of the group DAG (TaskGroup.after edges)
-        — groups in one level have no path between them and may run
-        concurrently, the way Airflow schedules independent task
-        groups of the fullload DAG side by side. A group with
-        ``after=None`` depends on every group listed before it (flat
-        chain), so legacy pipelines degenerate to one group per
-        level."""
-        level_of: dict[str, int] = {}
-        out: list[list[TaskGroup]] = []
-        for i, g in enumerate(self.groups):
-            deps = (
-                [x.name for x in self.groups[:i]]
-                if g.after is None
-                else g.after
-            )
-            unknown = [d for d in deps if d not in level_of]
-            if unknown:
-                raise ValueError(
-                    f"group {g.name}: unknown/later dependency {unknown}"
-                )
-            lvl = 1 + max((level_of[d] for d in deps), default=-1)
-            level_of[g.name] = lvl
-            while len(out) <= lvl:
-                out.append([])
-            out[lvl].append(g)
-        return out
-
     def _deps(self) -> "dict[str, set[str]]":
         deps: dict[str, set[str]] = {}
         seen: set[str] = set()
@@ -105,29 +77,7 @@ class Pipeline:
                 ctx.spark.conf.unset(_FLOOR_KEY)
 
     def _run_all(self, ctx: RunContext) -> list[ModelResult]:
-        if self.parallel_within_group:
-            results = self._run_dag(ctx)
-        else:
-            # Sequential mode: flat topological order (levels in
-            # order, groups and models in listed order) — the
-            # deterministic debugging path.
-            results = []
-            stop = False
-            for level in self.levels():
-                if stop:
-                    results.extend(
-                        ModelResult(m.name, "skipped", 0.0, 0)
-                        for g in level
-                        for m in g.models
-                    )
-                    continue
-                for g in level:
-                    for m in g.models:
-                        results.append(self._run_model(m, ctx))
-                if not self.continue_on_failure and any(
-                    r.status == "failed" for r in results
-                ):
-                    stop = True
+        results = self._run_dag(ctx)
         # Models cache()/localCheckpoint() intermediates (the
         # reference's TEMP TABLE idiom); their tables are parquet
         # now, so the blocks are dead weight — leave the session
@@ -150,7 +100,12 @@ class Pipeline:
         it depends on has finished — independent subtrees overlap
         instead of waiting at a global level barrier (the fullload
         DAG's trigger_rule/dependency semantics,
-        dag_fullload_pipeline.py:43-80)."""
+        dag_fullload_pipeline.py:43-80).
+
+        Sequential mode (``parallel_within_group=False``) is the same
+        runner on one worker: models run one at a time in a
+        deterministic topological order (groups and models in listed
+        order as they become ready) — the debugging path."""
         from concurrent.futures import FIRST_COMPLETED, wait
 
         deps = self._deps()
@@ -161,7 +116,8 @@ class Pipeline:
         failed = False
         future_group: dict = {}
 
-        with ThreadPoolExecutor(max_workers=self.max_parallel) as ex:
+        workers = self.max_parallel if self.parallel_within_group else 1
+        with ThreadPoolExecutor(max_workers=workers) as ex:
 
             def submit_ready() -> None:
                 nonlocal pending

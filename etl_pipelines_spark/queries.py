@@ -151,14 +151,6 @@ def dsum(c, alias: str) -> F.Column:
     return F.sum(_d(c)).cast("double").alias(alias)
 
 
-# SQL-side equivalents of the decimal-exact idioms.
-_SQL_D = "CAST({c} AS DECIMAL(12,2))"
-
-
-def _sql_dsum(c: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({c} AS DECIMAL(12,2))) AS DOUBLE) AS {alias}"
-
-
 # ===========================================================================
 # Headline / TPC-H-shaped queries (SURVEY §2.3-2.5, §2.7)
 # ===========================================================================

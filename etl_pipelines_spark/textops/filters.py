@@ -56,17 +56,6 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def pii_oracle_exprs() -> dict[str, str]:
-    """The DuckDB renderings of the same patterns (RE2). regexp_count
-    = len(regexp_extract_all(...)); regexp_replace needs the 'g' flag
-    (DuckDB replaces first-match by default, Java replaces all)."""
-    return {
-        "email": EMAIL_RE,
-        "phone": PHONE_RE,
-        "ip": IPV4_RE,
-    }
-
-
 def _line_structs(text_col: Column, line_tokens: int) -> Column:
     """Split text into fixed-width token 'lines': array of
     struct(line_no, line). Documents in the testdata are single-line

@@ -69,11 +69,6 @@ def normalize_expr(a: Column) -> Column:
     )
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    """Plain dot product (use with pre-normalized vectors)."""
-    return _dot(a, b)
-
-
 def _np_normalize_fn(dim: int):
     """Factory for a row-normalizer over an (n, dim) float64 matrix
     with the sum of squares accumulated in strict left-to-right order
@@ -151,22 +146,6 @@ def all_pairs_cosine(
     return df.mapInPandas(
         score, schema="id_a long, id_b long, cosine double"
     )
-
-
-def dot_flat(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as a FLAT chain of element_at multiply-adds.
-
-    Higher-order functions (zip_with/aggregate) are CodegenFallback:
-    interpreted per element with boxing, ~25µs per 64-dim pair —
-    ruinous inside an n² join condition. This flat spelling compiles
-    into whole-stage codegen (~0.1µs/pair). Left-associated adds keep
-    the exact fold order of the HOF/DuckDB list_sum form, so results
-    are bit-identical. Requires a known fixed dim (embedding columns
-    have one)."""
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        out = out + F.element_at(a, i) * F.element_at(b, i)
-    return out
 
 
 def brute_force_topk(
@@ -761,7 +740,6 @@ def lsh_neardup_pairs(
     auto_planes: bool = False,
     target_occ: int = 16,
     p_max: int = 14,
-    candidates_only: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs, the SCALE path: sign-LSH candidate
     buckets + exact-cosine verification (candidate→verify, the same
@@ -893,12 +871,6 @@ def lsh_neardup_pairs(
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
-    if candidates_only:
-        # instrumentation hook (r7 VERDICT #7): expose the candidate
-        # frame so stage volumes can be measured per scale point the
-        # way minhash_lsh_pairs was instrumented — no behavior change
-        # on the scoring path.
-        return cand
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     withv = cand.join(va, "id_a").join(vb, "id_b")

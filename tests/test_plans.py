@@ -25,6 +25,12 @@ from etl_pipelines_spark.sources.catalog import Catalog
 RUN_DATE = dt.date(1998, 8, 2)
 
 
+def _canon(df):
+    """A table's rows as sorted reprs over name-sorted columns."""
+    cols = sorted(df.columns)
+    return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
+
+
 @pytest.fixture()
 def ctx(spark, sf_dir, tmp_path):
     return RunContext(
@@ -310,25 +316,34 @@ class TestWarehousePipeline:
             for r in build_warehouse_pipeline().run(ctx_full)
         )
 
-        def canon(df):
-            cols = sorted(df.columns)
-            return sorted(
-                repr(tuple(r[c] for c in cols)) for r in df.collect()
-            )
-
         for table in ("ods.events", "ods.track_events",
                       "dwh.sessions_mart"):
-            assert canon(ctx_inc2.read(table)) == canon(
+            assert _canon(ctx_inc2.read(table)) == _canon(
                 ctx_full.read(table)
             ), f"incremental {table} != full rebuild"
 
-    def test_parallel_group_matches_sequential(self, ctx):
+    def test_parallel_group_matches_sequential(self, ctx, tmp_path):
+        """The parallel DAG run and the default one-worker run build
+        every table of the warehouse with the same rows."""
         pipe = build_warehouse_pipeline(parallel_within_group=True)
         results = pipe.run(ctx)
         assert all(r.status == "success" for r in results)
         kpi = ctx.read("dwh.daily_kpi")
         assert kpi.filter(F.col("n_orders") < 0).count() == 0
         assert kpi.count() == kpi.select("date").distinct().count()
+
+        ctx_seq = RunContext(
+            ctx.spark, Catalog(ctx.spark, str(tmp_path / "wh_seq")),
+            ctx.source_dir, RUN_DATE,
+        )
+        seq = build_warehouse_pipeline()
+        assert all(r.status == "success" for r in seq.run(ctx_seq))
+        tables = [m.name for g in seq.groups for m in g.models]
+        assert len(tables) == 31
+        for table in tables:
+            assert _canon(ctx.read(table)) == _canon(
+                ctx_seq.read(table)
+            ), f"parallel {table} != sequential"
 
 
 class TestQualityChecks:

@@ -41,18 +41,14 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
 
-    from pyspark.sql import SparkSession
-
-    from etl_pipelines_spark import session as _session
     from etl_pipelines_spark.queries import REGISTRY
+    from etl_pipelines_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "audit_single_partition",
+        master="local[8]",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    _session.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     n_flagged = 0

@@ -29,7 +29,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from etl_pipelines_spark import session as _session  # noqa: E402
+from etl_pipelines_spark.session import get_spark  # noqa: E402
 
 N_LANDING_FILES = 16  # micro-batch granularity of the drain
 
@@ -67,15 +67,10 @@ def main() -> None:
         if "--sf1" in sys.argv
         else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("etl_pipelines_spark-streaming-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "etl_pipelines_spark-streaming-bench",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    _session.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     from etl_pipelines_spark.streaming.incremental import (

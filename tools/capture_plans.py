@@ -4,10 +4,10 @@ Usage: python tools/capture_plans.py <outdir> <suffix> [query ...]
 Writes <outdir>/<query>_<suffix>.txt per query. With no query list,
 captures the bench HEADLINE set plus the heavy wh-pipeline model twins.
 
-The session mirrors bench.py conf (local[$SPARK_GRAFT_CPUS], small
-file splits) so the initial plan matches what the bench executes
-(AQE runtime re-optimization is additionally disclosed in
-OPTIMIZATION_r12.md where it matters).
+The session is the engine session with bench.py's split sizing
+(local[$SPARK_GRAFT_CPUS], ``bench.SMALL_SPLITS``) so the initial plan
+matches what the bench executes (AQE runtime re-optimization is
+additionally disclosed in OPTIMIZATION_r12.md where it matters).
 """
 from __future__ import annotations
 
@@ -20,24 +20,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
     os.makedirs(outdir, exist_ok=True)
-    from pyspark.sql import SparkSession
-    from etl_pipelines_spark import session as _session
     from etl_pipelines_spark.queries import REGISTRY
+    from etl_pipelines_spark.session import get_spark
     import bench
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("capture_plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    spark = get_spark(
+        "capture_plans",
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "8g",
+            **bench.SMALL_SPLITS,
+        },
     )
-    _session.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(256 * 1024))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     names = sys.argv[3:] or (
