@@ -161,7 +161,7 @@ def main() -> None:
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         elapsed = time.perf_counter() - t0
-        unpersist_tracked()
+        unpersist_tracked(blocking=True)
         return elapsed
 
     timings: dict[str, float] = {}

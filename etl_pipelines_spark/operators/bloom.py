@@ -13,7 +13,7 @@ plain join the oracle runs. Same physical-rewrite-only contract as
 operators/skew.salted_join.
 
 Determinism: bit positions come from the md5-prefix hash family
-(seeded by index, the dedup.md5_hash60 recipe), so the filter content
+(seeded by index, the hll.md5_hash60 recipe), so the filter content
 is reproducible across runs/engines — not needed for correctness
 (any bits would do), but it keeps plans and tests stable.
 

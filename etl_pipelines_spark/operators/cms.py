@@ -13,7 +13,7 @@ bounded by e·N/w with probability 1−e^−d.
 
 Value-exactness needs no tricks beyond determinism: every cell is an
 integer SUM and the estimate is an integer MIN of 4 cells, so with
-the md5-prefix hash family (SQL-replicable, the dedup.md5_hash60
+the md5-prefix hash family (SQL-replicable, the hll.md5_hash60
 recipe) both engines build the identical grid and the identical
 estimates — hash-exact with zero float ops anywhere.
 """

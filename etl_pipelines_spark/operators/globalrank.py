@@ -1,34 +1,40 @@
-"""Distributed exact global ranking (two-phase, no single-reducer sort).
+"""Distributed exact order statistics (two-phase, no single-reducer sort).
 
-A global ``PERCENT_RANK() OVER (ORDER BY x)`` is a total order: Spark
-compiles the empty-partition window to Exchange SinglePartition +
-Window, so every row funnels through ONE reducer. The reference
-accepts that for its dim-sized RFM mart
-(2_ods_marketing/00_customer_rfm_segmentation.sql:13-15); at 100 TB
-it is the bottleneck SURVEY §7 flags. This operator computes the SAME
-exact ranks with a bucket-histogram two-phase plan:
+A global ``PERCENT_RANK() OVER (ORDER BY x)``, ``RANK()``, exact
+quantile or per-group median needs a total order. The window form
+sorts the whole frame (or each whole group) in ONE task: the empty
+``PARTITION BY`` compiles to Exchange SinglePartition + Window. The
+reference accepts that for its dim-sized RFM mart
+(2_ods_marketing/00_customer_rfm_segmentation.sql:13-15) and its
+pricing median (9_SPV/Pricing/1_pricing_outlier_removal.sql:95-134);
+at 100 TB it is the bottleneck SURVEY §7 flags.
 
-1. collapse the frame to the distinct-value histogram
-   (``groupBy(x).count()`` — map-side combinable, one shuffle on x);
-2. range-partition the histogram by x (so partition ids follow value
-   order), take per-partition prefix sums with a window PARTITIONED
-   by the range-partition id — every reducer sorts only its own
-   value range;
-3. the per-partition totals (one row per range partition) are the
-   only thing globally sorted — a frame of ``shuffle.partitions``
-   rows — to derive each partition's global offset;
-4. broadcast the offsets back: for each distinct value,
-   ``rows_below = offset + prefix - count`` is the number of rows
-   strictly before it in the total order, so
-   ``percent_rank = rows_below / (n - 1)`` (RANK semantics: ties
-   share the rank of their first row) — bit-identical to the window
-   form because both are the same two non-negative integers divided
-   in float64;
-5. join the value→rank map back to the caller's frame on x.
+Every operator here is a thin caller of one kernel,
+:func:`cumulative_counts`, which numbers rows in that order without
+the big sort:
+
+1. range-partition by ``(groups, order)``: within a group, partition
+   ids follow the order, and equal keys never span a boundary;
+2. a running sum of the weight per ``(partition, group)``: every
+   reducer sorts only its own key range;
+3. per-``(group, partition)`` totals, a frame of
+   ``|groups| × shuffle.partitions`` rows, roll up to each
+   partition's offset within its group and to the group total. This
+   is the only global step (with no groups, a SinglePartition
+   exchange of that tiny frame);
+4. the offsets broadcast back: ``__cum = offset + running sum``.
+
+Percent rank and exact quantiles run the kernel over the value
+histogram (weight = the value's row count, map-side combined), so
+each distinct value is one row; global rank runs it over the rows
+with weight 1; the SPV median runs it per (brand, type) group
+(``queries.spv_price_outliers_core``). Every result is two
+non-negative integers per row, so the callers' arithmetic is
+bit-identical to the window form.
 
 NULL ordering is NOT normalized across engines (Spark sorts NULL
-first ascending, ANSI implementations vary) — callers coalesce
-nulls before ranking, as the RFM model itself does.
+first ascending, ANSI implementations vary): callers coalesce nulls
+before ranking, as the RFM model itself does.
 """
 
 from __future__ import annotations
@@ -40,16 +46,68 @@ from .cacheutil import tracked_cache
 from .localframe import local_frame
 
 
-def percent_rank_map(
-    df: DataFrame, col: str, ascending: bool = True
+def cumulative_counts(
+    df: DataFrame, order_cols, weight: "str | None" = None, groups=()
 ) -> DataFrame:
-    """Distinct-value → exact global PERCENT_RANK map for ``df[col]``.
+    """``df`` + ``__cum``, the weight summed over every row up to and
+    including this one in ``(groups, order_cols)`` order, and
+    ``__n``, the row's group total.
 
-    Output columns: ``col`` and ``__pct_rank`` (double). Every stage
-    is distributed: the histogram shuffles once on the value, prefix
-    sums run per range-partition, and only the partition-total frame
-    (``shuffle.partitions`` rows) crosses a SinglePartition exchange.
+    ``order_cols``: Column objects carrying their sort direction
+    (e.g. ``[F.col("revenue").desc(), F.col("pk").asc()]``). The same
+    expressions drive the range partitioner and the running window,
+    which is what makes the composition a total order; rows tied on
+    them are numbered in no fixed order. ``weight``: a non-negative
+    integer column, 1 per row when None. ``groups``: column names;
+    a row whose group key is NULL drops out of the offset join.
     """
+    groups = list(groups)
+    w = F.lit(1) if weight is None else F.col(weight)
+    running = (
+        Window.partitionBy("__pid", *groups)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # cache: the totals branch and the offset join both consume the
+    # numbered frame, and column pruning makes their exchange subtrees
+    # non-identical, so ReuseExchange never fires and the range
+    # exchange would run once per branch.
+    numbered = (
+        df.repartitionByRange(*groups, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__run", F.sum(w).over(running))
+        .transform(tracked_cache)
+    )
+    totals = numbered.groupBy(*groups, "__pid").agg(
+        F.sum(w).alias("__ptotal")
+    )
+    in_group = Window.partitionBy(*groups)
+    before = in_group.orderBy("__pid").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    offsets = totals.select(
+        *groups,
+        "__pid",
+        (F.sum("__ptotal").over(before) - F.col("__ptotal")).alias("__offset"),
+        F.sum("__ptotal").over(in_group).alias("__n"),
+    )
+    return (
+        numbered.join(F.broadcast(offsets), [*groups, "__pid"])
+        .withColumn("__cum", F.col("__offset") + F.col("__run"))
+        .drop("__pid", "__run", "__offset")
+    )
+
+
+def attach_percent_rank(
+    df: DataFrame, col: str, out: str, ascending: bool = True
+) -> DataFrame:
+    """``df`` + an ``out`` column holding the exact global
+    PERCENT_RANK of ``df[col]``, value-identical to
+    ``F.percent_rank().over(Window.orderBy(col))`` (the oracle form).
+    Over the value histogram, ``__cum - __cnt`` rows sort strictly
+    before a value (RANK semantics: ties share their first row's
+    rank). The value→rank map joins back on ``col``; AQE is free to
+    broadcast it when the distinct count is small."""
     order = F.col(col).asc() if ascending else F.col(col).desc()
     # The range sampling pass re-executes this histogram once, but
     # caching it here measured WORSE in paired two-tree A/B (r13:
@@ -57,113 +115,27 @@ def percent_rank_map(
     # 0.64-0.70 -> 0.88 s, control row flat): the map-side-combined
     # groupBy is cheaper to run twice than to materialize once.
     hist = df.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    # Range partitioning puts ascending value ranges in ascending
-    # partition ids, so pid order == value order. Each distinct value
-    # lands in exactly one partition (no tie spans a boundary —
-    # that's what phase 1 guarantees).
-    ranged = hist.repartitionByRange(order).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    within = (
-        Window.partitionBy("__pid")
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # cache the distinct-value histogram: the totals branch and the
-    # rank join would otherwise each recompute the corpus groupBy
-    # (pruning-divergent exchanges defeat ReuseExchange); the cached
-    # frame is |distinct values|, never the corpus
-    pref = ranged.withColumn("__prefix", F.sum("__cnt").over(within)).transform(tracked_cache)
-    totals = pref.groupBy("__pid").agg(
-        F.sum("__cnt").alias("__ptotal")
-    )
-    # The ONLY global sort: one row per range partition.
-    woff = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = totals.select(
-        "__pid",
-        (F.sum("__ptotal").over(woff) - F.col("__ptotal")).alias("__offset"),
-        F.sum("__ptotal").over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("__n"),
-    )
-    joined = pref.join(F.broadcast(offsets), "__pid")
-    rows_below = F.col("__offset") + F.col("__prefix") - F.col("__cnt")
+    cum = cumulative_counts(hist, [order], weight="__cnt")
     pct = F.when(
         F.col("__n") > 1,
-        rows_below.cast("double") / (F.col("__n") - 1).cast("double"),
+        (F.col("__cum") - F.col("__cnt")).cast("double")
+        / (F.col("__n") - 1).cast("double"),
     ).otherwise(F.lit(0.0))
-    return joined.select(F.col(col), pct.alias("__pct_rank"))
-
-
-def attach_percent_rank(
-    df: DataFrame, col: str, out: str, ascending: bool = True
-) -> DataFrame:
-    """``df`` + an ``out`` column holding the exact global
-    PERCENT_RANK of ``df[col]`` — value-identical to
-    ``F.percent_rank().over(Window.orderBy(col))`` (the oracle form)
-    without its SinglePartition sort of the full frame. The value→rank
-    map joins back on ``col``; AQE is free to broadcast it when the
-    distinct count is small (quartile inputs usually are)."""
-    ranks = percent_rank_map(df, col, ascending).withColumnRenamed(
-        "__pct_rank", out
-    )
-    return df.join(ranks, col)
+    return df.join(cum.select(col, pct.alias(out)), col)
 
 
 def attach_global_rank(
     df: DataFrame, order_cols, out: str
 ) -> DataFrame:
     """``df`` + an ``out`` INT column holding the exact global
-    ``RANK() OVER (ORDER BY order_cols)`` — value-identical to the
+    ``RANK() OVER (ORDER BY order_cols)``, value-identical to the
     window form when the composite order key is UNIQUE per row (then
-    RANK == ROW_NUMBER), without its Exchange SinglePartition sort of
-    the whole frame.
-
-    Two-phase plan: range-partition ``df`` by the order columns (so
-    partition-id order == value order), ROW_NUMBER within each range
-    partition (every reducer sorts only its own value range), roll
-    per-partition counts up to offsets via ONE global window over a
-    ``shuffle.partitions``-row frame, broadcast the offsets back.
-    rank = offset + within-partition row number.
-
-    ``order_cols``: list of Column objects carrying their sort
-    direction (e.g. ``[F.col("revenue").desc(), F.col("pk").asc()]``)
-    — the same expressions drive both the range partitioner and the
-    within-partition window, which is what makes the composition a
-    total order.
-    """
-    # cache the caller's frame BEFORE range partitioning: the range
-    # sampling pass otherwise re-executes the whole upstream rollup a
-    # second time (r13; same fix as percent_rank_map). Callers rank an
-    # AGGREGATED grain, so the cached frame is bounded by that grain.
-    df = df.transform(tracked_cache)
-    ranged = df.repartitionByRange(*order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    within = Window.partitionBy("__pid").orderBy(*order_cols)
-    # cache: the totals branch and the output join both consume rn;
-    # column pruning makes their exchange subtrees non-identical so
-    # ReuseExchange never fires and the input recomputes per branch.
-    # Callers rank an AGGREGATED grain (top_products: the part-grain
-    # rollup), so the cached frame is bounded by that grain.
-    rn = ranged.withColumn("__rn", F.row_number().over(within)).transform(tracked_cache)
-    totals = rn.groupBy("__pid").agg(F.count(F.lit(1)).alias("__ptotal"))
-    # The ONLY global sort: one row per range partition.
-    woff = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = totals.select(
-        "__pid",
-        (F.sum("__ptotal").over(woff) - F.col("__ptotal")).alias("__offset"),
-    )
+    RANK == ROW_NUMBER == the weight-1 ``__cum``). ``order_cols`` as
+    in :func:`cumulative_counts`."""
     return (
-        rn.join(F.broadcast(offsets), "__pid")
-        .withColumn(out, (F.col("__offset") + F.col("__rn")).cast("int"))
-        .drop("__pid", "__rn", "__offset")
+        cumulative_counts(df, order_cols)
+        .withColumn(out, F.col("__cum").cast("int"))
+        .drop("__cum", "__n")
     )
 
 
@@ -173,13 +145,9 @@ def exact_quantiles(
     qs: "list[tuple[int, int]]",
 ) -> DataFrame:
     """EXACT distributed quantiles (PERCENTILE_DISC semantics: the
-    smallest value whose cumulative count reaches ⌈q·n⌉) — the
-    scalable twin of `PERCENTILE_CONT/DISC OVER ()`, which plans as
-    a SinglePartition sort of the whole frame. Built from the same
-    two-phase machinery as percent_rank_map: value histogram (one
-    shuffle, map-side combined) → range partitions → per-partition
-    prefix sums → partition offsets (the only SinglePartition
-    exchange: `shuffle.partitions` rows).
+    smallest value whose cumulative count reaches ⌈q·n⌉), the
+    scalable twin of `PERCENTILE_CONT/DISC OVER ()`, which plans as a
+    SinglePartition sort of the whole frame.
 
     ``qs`` are RATIONALS [(num, den)] so the target rank
     ⌈num·n/den⌉ is integer arithmetic — no float q·n boundary can
@@ -188,39 +156,10 @@ def exact_quantiles(
 
     Output: (q, quantile) per requested rational, q rendered as the
     one IEEE division num/den rounded to 6dp."""
-    order = F.col(col).asc()
     # deliberately NOT cached — same negative A/B result as
-    # percent_rank_map above
+    # attach_percent_rank above
     hist = df.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    ranged = hist.repartitionByRange(order).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    within = (
-        Window.partitionBy("__pid")
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # same caching rationale as percent_rank_map: two consumers of
-    # the |distinct values|-sized prefix frame
-    pref = ranged.withColumn("__prefix", F.sum("__cnt").over(within)).transform(tracked_cache)
-    totals = pref.groupBy("__pid").agg(F.sum("__cnt").alias("__ptotal"))
-    woff = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = totals.select(
-        "__pid",
-        (F.sum("__ptotal").over(woff) - F.col("__ptotal")).alias("__offset"),
-        F.sum("__ptotal").over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("__n"),
-    )
-    cum = pref.join(F.broadcast(offsets), "__pid").select(
-        F.col(col),
-        (F.col("__offset") + F.col("__prefix")).alias("__cum"),
-        "__n",
-    )
+    cum = cumulative_counts(hist, [F.col(col).asc()], weight="__cnt")
     qdf = local_frame(
         df.sparkSession,
         {"num": [n for n, _ in qs], "den": [d for _, d in qs]},

@@ -8,7 +8,7 @@ Why not approx_count_distinct: Spark's HLL++ and DuckDB's sketch use
 engine-private hash functions and bias tables, so their estimates can
 never be compared across engines. This sketch fixes every ingredient:
 
-  * hash   — the 60-bit md5 prefix (textops.dedup.md5_hash60), which
+  * hash   — the 60-bit md5 prefix (md5_hash60 below), which
              both engines parse identically;
   * split  — top 6 bits select one of m=64 registers, the remaining
              54 bits feed the rank;
@@ -44,13 +44,20 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..textops.dedup import md5_hash60
-
 #: number of registers (2^BUCKET_BITS) and the rank-domain constant.
 BUCKET_BITS = 6
 M = 1 << BUCKET_BITS  # 64 registers
 W_BITS = 60 - BUCKET_BITS  # 54 rank bits
 C = W_BITS + 1  # scaled-sum exponent: 2^(C - rho) stays integral
+
+
+def md5_hash60(s: Column) -> Column:
+    """60-bit hash from md5 — SQL-REPLICABLE, unlike xxhash64
+    (Spark-private): 15 hex chars parse exactly into a signed BIGINT
+    in every engine (('0x' || hex)::BIGINT in DuckDB, conv(hex, 16,
+    10) here). The HLL register hash, and the cross-engine shingle
+    hash for textops' SimHash (use with bits=60)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
 def _lc_table() -> "list[float]":

@@ -136,7 +136,14 @@ def range_feed(df: DataFrame, *keys: str) -> DataFrame:
     scale. The partition count is explicit (REPARTITION_BY_NUM) so AQE
     cannot coalesce the tiny spec exchange to one task and serialize
     the decode — the r12 negative result with the implicit form.
-    Scale-adaptive: defaultParallelism is the cluster's core count."""
+    Scale-adaptive: defaultParallelism is the cluster's core count.
+
+    Ordering contract: range partition i holds keys below partition
+    i+1's, so the caller's ``sortWithinPartitions(keys)`` gives a
+    total order that ``collect``/``toPandas`` return, since they
+    concatenate partitions in id order. The order does NOT survive a
+    re-partition (any later shuffle) or a file sink (one file per
+    task, read back in no guaranteed order); sort again there."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartitionByRange(n, *keys)
 
@@ -3890,6 +3897,8 @@ def spv_price_outliers_core(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Unordered core of spv_price_outliers (raw lineitem + part —
     no conformed layer exists for either; the scan is shared with
     nothing upstream by design)."""
+    from .operators.globalrank import cumulative_counts
+
     l = lineitem.filter(
         F.col("l_shipdate") >= F.lit("1998-07-20").cast("timestamp_ntz")
     )
@@ -3915,66 +3924,23 @@ def spv_price_outliers_core(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     # comment): (lo+hi)/2 over identical element values is bit-exact
     # across engines, F.median's internal interpolation is not.
     #
-    # The middle pair is found by GROUP-KEYED TWO-PHASE order
-    # statistics, not a whole-partition window: the window form caps
-    # parallelism at the ~|brand×type| group count with each task
-    # holding facts/|groups| rows (measured ×10.8 sf1→sf10 slope, r7
-    # BENCH_SF10 — the worst in the rebuild). Here the fact rows
-    # range-partition by (group, coeff, tiebreak) so a big group
-    # SPANS partitions; per-(partition, group) ROW_NUMBER + counts
-    # roll up to per-group offsets over a |groups|×|partitions|-row
-    # frame; global in-group position = offset + local row number.
-    # Only the two middle rows per group survive, collapse to the
-    # ~|groups|-row medians table, and broadcast back. One window
-    # sort remains — the output price_rank the oracle pins.
+    # The middle pair comes from the GROUP-KEYED two-phase kernel
+    # (operators/globalrank.cumulative_counts), not a whole-group
+    # window: the window form caps parallelism at the ~|brand×type|
+    # group count with each task holding facts/|groups| rows
+    # (measured ×10.8 sf1→sf10 slope, r7 BENCH_SF10 — the worst in
+    # the rebuild). Keyed by group, one big group spans many range
+    # partitions; the ~|groups|-row medians table broadcasts back.
     okeys = [F.col("coeff"), F.col("l_orderkey"), F.col("l_linenumber")]
-    # cache the 14-day slice BEFORE the range exchange: the range
-    # sampling pass otherwise re-executes the scan+join child a
-    # second time (r13; the media-query sampling fix applied here).
-    # Same bound as the rn cache below — a night's working set.
-    s = s.transform(tracked_cache)
-    keyed = s.repartitionByRange(
-        F.col("p_brand"), F.col("p_type"), *okeys
-    ).withColumn("__pid", F.spark_partition_id())
-    w_in = Window.partitionBy("__pid", "p_brand", "p_type").orderBy(*okeys)
-    # cache the ranged+numbered slice: three consumers (per-group
-    # totals, middle-pair pick, output rows) would otherwise each
-    # recompute the scan+exchange — column pruning makes their
-    # exchange subtrees non-identical, so ReuseExchange never fires
-    # (measured: 3 fact scans, 4 range exchanges). The cached frame
-    # is the 14-DAY TRAILING SLICE (a night's working set, bounded by
-    # the window — never the fact corpus), the ops_allocation
-    # precedent.
-    rn = keyed.withColumn("__rn", F.row_number().over(w_in)).transform(tracked_cache)
-    tot = rn.groupBy("p_brand", "p_type", "__pid").agg(
-        F.count(F.lit(1)).alias("__ptotal")
-    )
-    w_off = (
-        Window.partitionBy("p_brand", "p_type")
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offs = tot.select(
-        "p_brand",
-        "p_type",
-        "__pid",
-        (F.sum("__ptotal").over(w_off) - F.col("__ptotal")).alias("__offset"),
-        F.sum("__ptotal").over(grp).alias("__gcnt"),
-    )
-    mid = (
-        rn.join(F.broadcast(offs), ["p_brand", "p_type", "__pid"])
-        .withColumn("__gpos", F.col("__offset") + F.col("__rn"))
-        .filter(
-            (F.col("__gpos") == F.expr("(__gcnt + 1) DIV 2"))
-            | (F.col("__gpos") == F.expr("__gcnt DIV 2 + 1"))
-        )
+    num = cumulative_counts(s, okeys, groups=["p_brand", "p_type"])
+    mid = num.filter(
+        (F.col("__cum") == F.expr("(__n + 1) DIV 2"))
+        | (F.col("__cum") == F.expr("__n DIV 2 + 1"))
     )
     medians = mid.groupBy("p_brand", "p_type").agg(
         ((F.min("coeff") + F.max("coeff")) / 2).alias("med")
     )
-    # output rows come from the same cached frame (one fact scan),
-    # not a second scan+join of the slice
-    m = rn.drop("__pid", "__rn").join(
+    m = num.drop("__cum", "__n").join(
         F.broadcast(medians), ["p_brand", "p_type"]
     )
     inliers = m.filter(
@@ -4239,9 +4205,8 @@ def top_products_core(li: DataFrame, part: DataFrame) -> DataFrame:
     the window form (Exchange SinglePartition + WindowExec) funnels
     it through one task (measured ×10.54 sf1→sf10 slope, r7
     BENCH_SF10). Instead it routes through the two-phase distributed
-    rank (operators/globalrank.attach_global_rank): range-partition
-    by (revenue DESC, p_partkey), per-partition ROW_NUMBER, offsets
-    from a shuffle.partitions-row frame. (revenue, p_partkey) is
+    rank (operators/globalrank.attach_global_rank), ordered by
+    (revenue DESC, p_partkey). (revenue, p_partkey) is
     unique per row, so RANK == ROW_NUMBER — value-identical to the
     oracle's RANK() OVER (ORDER BY revenue DESC, p_partkey). The
     brand rank stays a partitioned window (brand-grain parallelism
@@ -4641,7 +4606,7 @@ def dd_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc). textops/dedup.neardup_components picks its path by
     measured edge count: driver union-find when the pair graph fits
     (it is the detector's OUTPUT — tiny relative to the corpus),
-    distributed min-label propagation beyond; the oracle computes
+    distributed star contraction beyond; the oracle computes
     the same closure with a recursive CTE over the exact-Jaccard
     pair set."""
     d = load_spread(spark, sf_dir, "documents")

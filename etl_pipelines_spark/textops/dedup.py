@@ -506,14 +506,6 @@ def minhash_lsh_pairs(
 # SimHash (Hamming-space near-dup)
 # ---------------------------------------------------------------------------
 
-def md5_hash60(s: Column) -> Column:
-    """60-bit shingle hash from md5 — SQL-REPLICABLE, unlike
-    xxhash64 (Spark-private): 15 hex chars parse exactly into a
-    signed BIGINT in every engine (('0x' || hex)::BIGINT in DuckDB,
-    conv(hex, 16, 10) here). Use with bits=60."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-
-
 def simhash_votes(
     text: Column, n: int = 2, bits: int = 64, hash_fn=None
 ) -> Column:
@@ -649,7 +641,6 @@ def neardup_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
     driver_max_edges: int = 5_000_000,
 ) -> DataFrame:
     """Connected components over an undirected near-duplicate pair
@@ -668,16 +659,10 @@ def neardup_components(
       ROUND just to move kilobytes). The labels go back as an Arrow
       table (operators/localframe), so the result plans as a window
       over a LocalTableScan: no Python worker reads them back.
-    - larger: distributed min-label propagation — every node starts
-      labeled with its own id; each round takes the min of its own
-      and its neighbors' labels; converges in O(graph diameter)
-      rounds, each one shuffle join + groupBy over the edge set
-      only. Near-dup graphs are overwhelmingly tiny disjoint
-      cliques (diameter 1-2), so 3-4 rounds reach fixpoint;
-      `max_iter` bounds adversarial chains. At extreme scale swap
-      in large-star/small-star (Kiveris et al., "Connected
-      Components in MapReduce") — same join primitive, squared
-      convergence rate; the loop below IS its small-star half.
+    - larger: :func:`star_components` (alternating large-star /
+      small-star, Kiveris et al.), O(log² n) rounds whatever the
+      graph's diameter; it raises rather than return an unconverged,
+      over-split labeling.
 
     Returns (doc_id, component_id, component_size, is_canonical)
     for every doc that appears in at least one pair; component_id =
@@ -713,40 +698,7 @@ def neardup_components(
             "src long, comp long",
         )
         return _component_output(labels)
-    # localCheckpoint (not just persist) each round: an iterative
-    # dataflow's logical plan otherwise grows with every iteration
-    # and planning/codegen cost explodes long before the data does.
-    # At cluster scale with lineage-based fault tolerance required,
-    # use a reliable checkpoint dir instead — same call shape.
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = sym.select("src").distinct().withColumn("comp", F.col("src")).localCheckpoint()
-    for _ in range(max_iter):
-        neighbor = (
-            sym.alias("e")
-            .join(labels.alias("l"), F.col("e.dst") == F.col("l.src"))
-            .select(F.col("e.src").alias("src"), F.col("l.comp").alias("comp"))
-        )
-        new_labels = (
-            labels.union(neighbor)
-            .groupBy("src")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
-        )
-        n_changed = (
-            new_labels.alias("n")
-            .join(
-                labels.alias("o"),
-                (F.col("n.src") == F.col("o.src"))
-                & (F.col("n.comp") != F.col("o.comp")),
-            )
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
-            break
-    return _component_output(labels)
+    return star_components(edges, "src", "dst")
 
 
 def _component_output(labels: DataFrame) -> DataFrame:
@@ -771,11 +723,11 @@ def star_components(
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    — the EXTREME-scale alternative to min-label propagation that
-    neardup_components' docstring points at: propagation converges in
-    O(diameter) rounds, star contraction in O(log² n) REGARDLESS of
-    diameter, so adversarially chainy graphs (long near-dup chains
-    from templated text) stop costing one shuffle per hop.
+    — neardup_components' path for graphs too large for the driver.
+    Min-label propagation would need O(diameter) rounds; star
+    contraction needs O(log² n) REGARDLESS of diameter, so
+    adversarially chainy graphs (long near-dup chains from templated
+    text) do not cost one shuffle per hop.
 
     One round = two groupBy-min + explode passes over the edge list:
 
@@ -788,7 +740,8 @@ def star_components(
     Both steps preserve connectivity and monotonically shrink the
     potential; at fixpoint every edge is (node → component-min), the
     same labeling as union-find. localCheckpoint per round truncates
-    the iterative plan's lineage (the scd2/propagation lesson).
+    the iterative plan's lineage, whose planning cost would otherwise
+    grow with every round.
     Output schema identical to neardup_components; equivalence with
     the union-find reference is property-tested on random graphs."""
     sym = (

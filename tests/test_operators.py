@@ -478,3 +478,59 @@ class TestGlobalRank:
         out = attach_global_rank(df, [F.col("v").asc()], "rk")
         assert out.count() == 0
         assert "rk" in out.columns
+
+    def test_grouped_cumulative_counts_match_window_row_number(self, spark):
+        """The grouped kernel (the SPV median's form): 3 groups x 5,000
+        rows with heavy value ties (mod 37) and a unique id tiebreak.
+        With AQE's partition coalescing off, every group spans several
+        of the 8 range partitions. __cum must be the in-group
+        ROW_NUMBER and __n the group count, on every row."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from etl_pipelines_spark.operators.globalrank import cumulative_counts
+
+        coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+        before = spark.conf.get(coalesce)
+        spark.conf.set(coalesce, "false")
+        try:
+            df = spark.range(15000).select(
+                F.col("id"),
+                F.pmod(F.col("id"), 3).alias("g"),
+                F.pmod(F.col("id") * 131 + 7, 37).alias("v"),
+            )
+            order = [F.col("v").desc(), F.col("id").asc()]
+            spans = (
+                df.repartitionByRange("g", *order)
+                .withColumn("pid", F.spark_partition_id())
+                .groupBy("g")
+                .agg(F.countDistinct("pid").alias("parts"))
+            )
+            assert min(r.parts for r in spans.collect()) > 1
+            want = df.select(
+                "id",
+                F.row_number()
+                .over(Window.partitionBy("g").orderBy(*order))
+                .alias("rn"),
+                F.count(F.lit(1)).over(Window.partitionBy("g")).alias("cnt"),
+            )
+            got = cumulative_counts(df, order, groups=["g"])
+            assert got.count() == 15000
+            n_bad = (
+                got.join(want, "id")
+                .filter("__cum <> rn OR __n <> cnt")
+                .count()
+            )
+        finally:
+            spark.conf.set(coalesce, before)
+        assert n_bad == 0
+
+    def test_grouped_cumulative_counts_empty_frame(self, spark):
+        from pyspark.sql import functions as F
+
+        from etl_pipelines_spark.operators.globalrank import cumulative_counts
+
+        df = spark.range(0).select("id", F.col("id").alias("g"))
+        out = cumulative_counts(df, [F.col("id").asc()], groups=["g"])
+        assert out.count() == 0
+        assert {"__cum", "__n"} <= set(out.columns)

@@ -269,7 +269,7 @@ class TestNeardupComponents:
         assert all(r.component_size == n + 1 for r in out)
 
     def test_distributed_path_matches_driver_path(self, spark):
-        # driver_max_edges=0 forces the label-propagation loop; both
+        # driver_max_edges=0 forces the star-contraction path; both
         # paths must emit the identical component labeling.
         from etl_pipelines_spark.textops import neardup_components
 
@@ -283,6 +283,23 @@ class TestNeardupComponents:
             for r in neardup_components(pairs, driver_max_edges=0).collect()
         )
         assert drv == dist
+
+    def test_distributed_path_closes_a_30_hop_chain(self, spark):
+        # A chain's diameter exceeds any fixed round budget of label
+        # propagation; the large-graph path must still return the one
+        # component the driver path finds.
+        from etl_pipelines_spark.textops import neardup_components
+
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
+        )
+        drv = sorted(tuple(r) for r in neardup_components(pairs).collect())
+        dist = sorted(
+            tuple(r)
+            for r in neardup_components(pairs, driver_max_edges=0).collect()
+        )
+        assert {r[1] for r in dist} == {0}
+        assert dist == drv
 
     def test_driver_path_labels_plan_as_local_table_scan(self, spark):
         # The union-find labels go back to Spark as an Arrow table: a
