@@ -22,7 +22,11 @@ the big sort:
    partition's offset within its group and to the group total. This
    is the only global step (with no groups, a SinglePartition
    exchange of that tiny frame);
-4. the offsets broadcast back: ``__cum = offset + running sum``.
+4. one row per partition broadcasts back, keyed by the partition id:
+   only a partition's first group can have rows in earlier
+   partitions, and only its first or last group rows elsewhere, so
+   those two groups' offset and totals are all a row needs:
+   ``__cum = offset + running sum``.
 
 Percent rank and exact quantiles run the kernel over the value
 histogram (weight = the value's row count, map-side combined), so
@@ -58,16 +62,12 @@ def cumulative_counts(
     expressions drive the range partitioner and the running window,
     which is what makes the composition a total order; rows tied on
     them are numbered in no fixed order. ``weight``: a non-negative
-    integer column, 1 per row when None. ``groups``: column names;
-    a row whose group key is NULL drops out of the offset join.
+    integer column, 1 per row when None. ``groups``: column names; a
+    NULL group key is a group of its own, as in ``PARTITION BY``.
     """
     groups = list(groups)
     w = F.lit(1) if weight is None else F.col(weight)
-    running = (
-        Window.partitionBy("__pid", *groups)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    in_part = Window.partitionBy("__pid", *groups).orderBy(*order_cols)
     # cache: the totals branch and the offset join both consume the
     # numbered frame, and column pruning makes their exchange subtrees
     # non-identical, so ReuseExchange never fires and the range
@@ -75,7 +75,12 @@ def cumulative_counts(
     numbered = (
         df.repartitionByRange(*groups, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__run", F.sum(w).over(running))
+        .withColumn("__run", F.sum(w).over(in_part.rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )))
+        .withColumn("__local", F.sum(w).over(in_part.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )))
         .transform(tracked_cache)
     )
     totals = numbered.groupBy(*groups, "__pid").agg(
@@ -91,10 +96,39 @@ def cumulative_counts(
         (F.sum("__ptotal").over(before) - F.col("__ptotal")).alias("__offset"),
         F.sum("__ptotal").over(in_group).alias("__n"),
     )
+    # A partition holds one contiguous range of groups: only its first
+    # group can start in an earlier partition, only its first or last
+    # continue in another one. One row per partition carries those two
+    # groups' keys, offset and totals; every other group lies wholly in
+    # the partition. Keyed by the integer partition id, the broadcast
+    # is a compact long-keyed hash map, where a key of group strings
+    # costs a whole memory page (tens of MB) on every executor.
+    edges = offsets.groupBy("__pid").agg(
+        F.min(F.struct(*groups, "__offset", "__n")).alias("__first"),
+        F.max(F.struct(*groups, "__n")).alias("__last"),
+    )
+
+    def in_edge(edge: str):
+        same = F.lit(True)
+        for g in groups:
+            same = same & F.col(g).eqNullSafe(F.col(edge)[g])
+        return same
+
+    first, last = in_edge("__first"), in_edge("__last")
     return (
-        numbered.join(F.broadcast(offsets), [*groups, "__pid"])
-        .withColumn("__cum", F.col("__offset") + F.col("__run"))
-        .drop("__pid", "__run", "__offset")
+        numbered.join(F.broadcast(edges), "__pid")
+        .withColumn(
+            "__cum",
+            F.col("__run")
+            + F.when(first, F.col("__first.__offset")).otherwise(F.lit(0)),
+        )
+        .withColumn(
+            "__n",
+            F.when(first, F.col("__first.__n"))
+            .when(last, F.col("__last.__n"))
+            .otherwise(F.col("__local")),
+        )
+        .drop("__pid", "__run", "__local", "__first", "__last")
     )
 
 

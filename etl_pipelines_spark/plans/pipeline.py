@@ -84,14 +84,23 @@ class Pipeline:
         # clean rather than letting 31 models' caches linger.
         # unpersist_tracked also drains the tracked-cache registry so
         # repeated pipeline runs don't grow the reference list
-        # (ADVICE r8 cache-lifecycle item).
+        # (ADVICE r8 cache-lifecycle item). Blocking, so the block
+        # removal ends inside run() instead of overlapping whatever the
+        # caller does next.
         from ..operators.cacheutil import unpersist_tracked
 
-        unpersist_tracked()
+        unpersist_tracked(blocking=True)
         try:
             ctx.spark.catalog.clearCache()
         except Exception:
             pass
+        # Spark drops a finished query's broadcast blocks and shuffle
+        # files only after a driver GC shows its ContextCleaner they are
+        # dead (the reason for spark.cleaner.periodicGC.interval); the
+        # DAG leaves a few hundred of each. Collect at the run boundary
+        # so that clean-up starts here, not at whatever later GC the
+        # caller's next job happens to meet.
+        ctx.spark.sparkContext._jvm.System.gc()
         return results
 
     def _run_dag(self, ctx: RunContext) -> list[ModelResult]:

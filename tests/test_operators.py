@@ -525,6 +525,57 @@ class TestGlobalRank:
             spark.conf.set(coalesce, before)
         assert n_bad == 0
 
+    def test_grouped_cumulative_counts_null_group_is_a_group(self, spark):
+        """A NULL group key numbers like any other group, as in
+        ``PARTITION BY``."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from etl_pipelines_spark.operators.globalrank import cumulative_counts
+
+        coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+        before = spark.conf.get(coalesce)
+        spark.conf.set(coalesce, "false")
+        try:
+            df = spark.range(3000).select(
+                F.col("id"),
+                F.when(F.col("id") % 3 > 0, F.col("id") % 3).alias("g"),
+            )
+            order = [F.col("id").desc()]
+            want = df.select(
+                "id",
+                F.row_number()
+                .over(Window.partitionBy("g").orderBy(*order))
+                .alias("rn"),
+                F.count(F.lit(1)).over(Window.partitionBy("g")).alias("cnt"),
+            )
+            got = cumulative_counts(df, order, groups=["g"])
+            assert got.count() == 3000
+            n_bad = got.join(want, "id").filter("__cum <> rn OR __n <> cnt").count()
+        finally:
+            spark.conf.set(coalesce, before)
+        assert n_bad == 0
+
+    def test_grouped_cumulative_counts_broadcast_is_keyed_by_partition(self, spark):
+        """The offsets go back keyed by the integer partition id alone:
+        a broadcast keyed by the group columns builds a hash map that
+        holds a whole memory page per executor, however few its rows."""
+        import re
+
+        from pyspark.sql import functions as F
+
+        from etl_pipelines_spark.operators.globalrank import cumulative_counts
+
+        df = spark.range(100).select(
+            F.col("id"), F.concat(F.lit("g"), F.col("id") % 3).alias("g")
+        )
+        out = cumulative_counts(df, [F.col("id").asc()], groups=["g"])
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        joins = re.findall(r"BroadcastHashJoin (\[[^\]]*\]), (\[[^\]]*\])", plan)
+        assert joins, plan
+        for keys in joins:
+            assert all(re.fullmatch(r"\[__pid#\d+\]", k) for k in keys), plan
+
     def test_grouped_cumulative_counts_empty_frame(self, spark):
         from pyspark.sql import functions as F
 
