@@ -3940,9 +3940,10 @@ def spv_price_outliers_core(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     medians = mid.groupBy("p_brand", "p_type").agg(
         ((F.min("coeff") + F.max("coeff")) / 2).alias("med")
     )
-    m = num.drop("__cum", "__n").join(
-        F.broadcast(medians), ["p_brand", "p_type"]
-    )
+    # The output rows come from the slice, not from ``num``: reading
+    # them from the kernel's result would evaluate its totals and
+    # offset windows a second time.
+    m = s.join(F.broadcast(medians), ["p_brand", "p_type"])
     inliers = m.filter(
         F.col("ref_price").isNull()
         | ((F.col("coeff") - F.col("med")).between(-10.0, 10.0))
@@ -4380,13 +4381,14 @@ ORDER BY grain, COALESCE(region, ''), COALESCE(nation, '')
 """,
 )
 def luxco_multigrain_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-grain reporting via UNION ALL of per-grain aggregates
-    with NULL padding — the reference's substitute for ROLLUP (SURVEY
+    """Multi-grain reporting — the reference's UNION ALL of per-grain
+    aggregates with NULL padding, its substitute for ROLLUP (SURVEY
     §2.5 note; 4_dwh_core/daily_kpi_report_main_tables.sql +
     bi-airflow-prod/dags/luxco/spv_monthly_V2/sql/luxco_reporting.sql
-    shape). The joined base is computed once and cached so the three
-    grains re-aggregate the in-memory base instead of re-scanning and
-    re-joining; each grain is a partial-agg + tiny shuffle."""
+    shape). The engine computes the three grains as one ROLLUP
+    (region, nation), as a_rollup_multigrain does: the joined base is
+    read once, with no cache, and every grain comes out of one
+    partial-agg + tiny shuffle."""
     return luxco_multigrain_union_core(
         load(spark, sf_dir, "orders"),
         load(spark, sf_dir, "customer"),
@@ -4416,34 +4418,24 @@ def luxco_multigrain_union_core(
             F.col("n_name").alias("nation"),
             _d(F.col("o_totalprice")).alias("price"),
         )
-        .transform(tracked_cache)
     )
-    aggs = [
-        F.sum("price").cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_orders"),
-    ]
-    nation_g = (
-        base.groupBy("region", "nation").agg(*aggs).select(
-            F.lit("nation").alias("grain"), "region", "nation", "revenue", "n_orders"
+    gid = F.col("__gid")
+    return (
+        base.rollup("region", "nation")
+        .agg(
+            F.grouping_id().alias("__gid"),
+            F.sum("price").cast("double").alias("revenue"),
+            F.count(F.lit(1)).alias("n_orders"),
         )
-    )
-    region_g = (
-        base.groupBy("region").agg(*aggs).select(
-            F.lit("region").alias("grain"),
+        .select(
+            F.when(gid == 0, "nation").when(gid == 1, "region")
+            .otherwise("total").alias("grain"),
             "region",
-            F.lit(None).cast("string").alias("nation"),
+            "nation",
             "revenue",
             "n_orders",
         )
     )
-    total_g = base.agg(*aggs).select(
-        F.lit("total").alias("grain"),
-        F.lit(None).cast("string").alias("region"),
-        F.lit(None).cast("string").alias("nation"),
-        "revenue",
-        "n_orders",
-    )
-    return nation_g.unionByName(region_g).unionByName(total_g)
 
 
 @q(
@@ -6135,21 +6127,16 @@ def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean_r == id % 256 exactly — uint8 sums are exact in float64),
     so the driver verifies the DECODED PIXELS, not just metadata.
     Gradient payloads + resize resampling are pytest-gated
-    (tests/test_multimodal.py). Scale: narrow mapInPandas, one output
-    sort; bytes never leave the Arrow batch."""
+    (tests/test_multimodal.py). Scale: the media_id spec rows are
+    range-partitioned (range_feed), then one narrow mapInPandas and a
+    partition-local sort; bytes never leave the Arrow batch."""
     from .multimodal import decode_ppm_image, synth_ppm_payload
 
-    d = load_spread(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    media = d.select(
-        did.alias("media_id"),
-        synth_ppm_payload(
-            did, F.pmod(did, 16) + 4, F.pmod(did, 12) + 4
-        ).alias("payload"),
-    )
-    # r12: cache before the sort (same sampling-double-execution fix
-    # as the other decode queries; see mm_gif_decode).
-    return decode_ppm_image(media).transform(tracked_cache).orderBy("media_id")
+    spec = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id"))
+    mid = F.col("media_id")
+    payload = synth_ppm_payload(mid, F.pmod(mid, 16) + 4, F.pmod(mid, 12) + 4)
+    media = range_feed(spec, "media_id").select(mid, payload.alias("payload"))
+    return decode_ppm_image(media).sortWithinPartitions("media_id")
 
 
 @q(
@@ -6170,21 +6157,15 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample count) and decode_wav_audio walks the chunk structure to
     recover rate / samples / channels / duration. The oracle derives
     the same values in closed form, so the driver verifies actual
-    RIFF parsing. Scale: narrow mapInPandas + output sort only."""
+    RIFF parsing. Scale: range-partitioned spec rows (range_feed), one
+    narrow mapInPandas, a partition-local sort."""
     from .multimodal import decode_wav_audio, synth_wav_payload
 
-    d = load_spread(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    media = d.select(
-        did.alias("media_id"),
-        synth_wav_payload(did, F.pmod(did, 400) + 100, 8000).alias("payload"),
-    )
-    # r12: cache the decoded metadata frame before the output sort —
-    # range-partition SAMPLING otherwise re-executes the whole Python
-    # synth+decode chain a second time (measured: the doubled 32-task
-    # stage pair in OPTIMIZATION_r12.md; gif 1.68 -> 1.07 s). The
-    # cached frame is rows x scalar metadata, never payload bytes.
-    return decode_wav_audio(media).transform(tracked_cache).orderBy("media_id")
+    spec = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("media_id"))
+    mid = F.col("media_id")
+    payload = synth_wav_payload(mid, F.pmod(mid, 400) + 100, 8000)
+    media = range_feed(spec, "media_id").select(mid, payload.alias("payload"))
+    return decode_wav_audio(media).sortWithinPartitions("media_id")
 
 
 @q(

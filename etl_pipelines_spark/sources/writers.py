@@ -22,7 +22,7 @@ import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -85,6 +85,20 @@ def _atomic_swap(tmp_dir: str, final_dir: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
 
 
+def _staged_replace(writer: DataFrameWriter, path: str) -> None:
+    """Replace the table at ``path`` with what ``writer`` writes: the
+    write lands in a staging sibling, then :func:`_atomic_swap` moves
+    it in. A write that raises removes its staging dir and leaves the
+    old table as it was, so a retried model leaves no leftovers."""
+    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
+    try:
+        writer.parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    _atomic_swap(tmp, path)
+
+
 def _cluster_partitions(df: DataFrame, partition_by: list[str]) -> DataFrame:
     """REBALANCE the frame by its partition columns before a
     ``partitionBy`` write (guide §6: coalesce on write). Without it
@@ -120,16 +134,14 @@ def full_refresh(
     task so parquet row-group min/max stats make range predicates on
     those columns skip row groups at scan time — the Spark-native
     form of Redshift's zone maps."""
-    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
     if partition_by:
         df = _cluster_partitions(df, partition_by)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    w = df.write.mode("overwrite")
+    w = df.write
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    _atomic_swap(tmp, path)
+    _staged_replace(w, path)
 
 
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -151,14 +163,13 @@ def snapshot(
     partition, idempotently (subscription_historical.sql:2-110:
     DELETE WHERE date=...; INSERT ... current_date-1 AS date).
 
-    Dynamic partition overwrite replaces only the touched partition;
+    Dynamic partition overwrite (a write option, so the caller's
+    session conf is left alone) replaces only the touched partition;
     re-running a day is a no-op-equivalent overwrite of that day.
     ``sort_within_by``: SORTKEY analogue for event/history tables
     (see full_refresh) — range scans on the sort column skip parquet
     row groups via min/max stats.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = _cluster_partitions(
         df.withColumn(date_col, F.lit(snapshot_date).cast("date")),
         [date_col],
@@ -167,6 +178,7 @@ def snapshot(
         out = out.sortWithinPartitions(*sort_within_by)
     (
         out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(date_col)
         .parquet(path)
     )
@@ -249,10 +261,10 @@ def upsert(
                     "to leave deleted keys' rows on disk"
                 )
             stale_dirs.append(sub)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             _cluster_partitions(out, partition_by)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
             .parquet(path)
         )
@@ -271,11 +283,9 @@ def upsert(
     else:
         kept = existing.join(new_rows.select(*keys).distinct(), keys, "left_anti")
         out = kept.unionByName(new_rows)
-        # Write to a staging dir first: 'out' lazily reads the dir
-        # being replaced, so the write must land elsewhere, then swap.
-        tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, path)
+        # Staged: 'out' lazily reads the dir being replaced, so the
+        # write must land elsewhere, then swap.
+        _staged_replace(out.write, path)
 
 
 def schema_evolving_append(existing: DataFrame, incoming: DataFrame) -> DataFrame:
@@ -291,10 +301,7 @@ def backup_table(spark: SparkSession, path: str, backup_path: str) -> None:
     5_master_historical/on_failure/subscription_historical_on_failure
     .sql:1-5). A read-then-write copy via the atomic swap, so a
     half-written backup can never be mistaken for a complete one."""
-    df = spark.read.parquet(path)
-    tmp = backup_path + "." + uuid.uuid4().hex[:8] + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, backup_path)
+    _staged_replace(spark.read.parquet(path).write, backup_path)
 
 
 def restore_missing_snapshots(
@@ -325,9 +332,7 @@ def restore_missing_snapshots(
     n = to_restore.count()
     if n:
         merged = schema_evolving_append(hist, to_restore)
-        tmp = history_path + "." + uuid.uuid4().hex[:8] + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _atomic_swap(tmp, history_path)
+        _staged_replace(merged.write, history_path)
     return n
 
 
@@ -358,9 +363,7 @@ def compact(
     df = spark.read.parquet(path)
     if target_files is None:
         target_files = max(1, -(-_dir_bytes(path) // target_bytes))
-    tmp = path + "." + uuid.uuid4().hex[:8] + ".tmp"
-    df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-    _atomic_swap(tmp, path)
+    _staged_replace(df.repartition(target_files).write, path)
     return target_files
 
 

@@ -8,11 +8,16 @@ with ROW_NUMBER()=1 (30_segment_events/01_track_events.sql:28,144)
 and DELETE+INSERT upserts (05_all_events_incremental.sql:160-170).
 
 Spark-first replacement:
-- file-source ``readStream`` over the landing directory with
-  ``Trigger.AvailableNow`` — drains everything new since the last
-  checkpoint, then stops: exactly the reference's "incremental run"
-  but with exactly-once file tracking instead of loaded_at
-  predicates.
+- file-source ``readStream`` over the landing directory, run by
+  :func:`drain` — every ``run_*`` runner here and in ``joins.py``
+  ends in it. ``drain`` starts the writer with its checkpoint and
+  ``Trigger.AvailableNow``, which processes everything new since the
+  last checkpoint and then stops: the reference's "incremental run"
+  with exactly-once file tracking instead of loaded_at predicates.
+  It returns the finished ``StreamingQuery``, whose
+  ``recentProgress`` is the per-micro-batch record. A drain that
+  outlasts its timeout is stopped and raises ``TimeoutError``, so a
+  runner never returns while its query is still writing.
 - watermark + dropDuplicates for in-flight dedup (St2),
 - ``foreachBatch`` → key-wise upsert into the target table (St3) —
   idempotent replay, like the reference's DELETE USING + INSERT.
@@ -28,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -81,6 +87,26 @@ def deduped(stream: DataFrame, watermark: str = "1 day") -> DataFrame:
     )
 
 
+def drain(
+    writer: DataStreamWriter, checkpoint_dir: str, timeout_sec: float
+) -> StreamingQuery:
+    """Start ``writer`` as one availableNow drain from
+    ``checkpoint_dir`` and wait for it to finish. Returns the finished
+    query; a query that fails re-raises its error. On timeout the
+    query is stopped and ``TimeoutError`` raised."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not drain in {timeout_sec} s"
+        )
+    return q
+
+
 def run_incremental_upsert(
     spark: SparkSession,
     landing_dir: str,
@@ -88,7 +114,7 @@ def run_incremental_upsert(
     checkpoint_dir: str,
     keys: list[str] | None = None,
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain all new files, upserting each micro-batch into the
     target (St3). Replays are idempotent: batch-level dedup + keyed
     upsert, and the checkpoint guarantees each file is processed
@@ -100,13 +126,7 @@ def run_incremental_upsert(
         clean = batch.dropDuplicates(keys)
         writers.upsert(spark, clean, target_path, keys)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    return drain(stream.writeStream.foreachBatch(merge), checkpoint_dir, timeout_sec)
 
 
 def streaming_session_rollup(
@@ -142,20 +162,13 @@ def run_streaming_sessions(
     checkpoint_dir: str,
     gap: str = "30 minutes",
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """End-to-end streaming sessionization into a parquet sink
     (append mode: each closed session is written exactly once)."""
     stream = read_events_stream(spark, landing_dir)
     rollup = streaming_session_rollup(stream, gap)
-    q = (
-        rollup.writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    writer = rollup.writeStream.format("parquet").option("path", target_path)
+    return drain(writer.outputMode("append"), checkpoint_dir, timeout_sec)
 
 
 def streaming_daily_counts(
@@ -194,20 +207,13 @@ def run_streaming_daily_counts(
     checkpoint_dir: str,
     watermark: str = "1 day",
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain new files through the windowed aggregation; closed days
     append to parquet exactly once per (day, event_type)."""
     stream = read_events_stream(spark, landing_dir)
     counts = streaming_daily_counts(stream, watermark)
-    q = (
-        counts.writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    writer = counts.writeStream.format("parquet").option("path", target_path)
+    return drain(writer.outputMode("append"), checkpoint_dir, timeout_sec)
 
 
 RUNNING_STATS_OUTPUT = StructType(
@@ -283,7 +289,7 @@ def run_running_user_stats(
     target_path: str,
     checkpoint_dir: str,
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain new files through the stateful operator; the state store
     (backed by the checkpoint) carries per-user totals across runs,
     so a second drain continues counting where the first stopped."""
@@ -293,14 +299,8 @@ def run_running_user_stats(
     def sink(batch: DataFrame, _batch_id: int) -> None:
         writers.upsert(spark, batch, target_path, ["user_id"])
 
-    q = (
-        stats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    writer = stats.writeStream.foreachBatch(sink).outputMode("update")
+    return drain(writer, checkpoint_dir, timeout_sec)
 
 
 def run_streaming_scd2(
@@ -313,7 +313,7 @@ def run_streaming_scd2(
     schema: "StructType",
     date_col: str = "snapshot_date",
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """St3 applied to dimension history: snapshot drops land as
     files; each micro-batch's snapshots merge into the stored SCD2
     interval history through operators/scd2.scd2_merge, in
@@ -349,13 +349,7 @@ def run_streaming_scd2(
             hist = scd2_merge(hist, snap, keys, attrs, d)
         writers.full_refresh(hist, history_path)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    return drain(stream.writeStream.foreachBatch(merge), checkpoint_dir, timeout_sec)
 
 
 def run_enriched_append(
@@ -366,7 +360,7 @@ def run_enriched_append(
     checkpoint_dir: str,
     on: "list[str] | None" = None,
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Stream-static ENRICHMENT (the missing St-family member next
     to dedup/upsert/session/window/join): events stream joined
     against a slowly-changing dimension table, appended enriched.
@@ -392,10 +386,4 @@ def run_enriched_append(
         out = batch.join(F.broadcast(dim), on, "left")
         out.write.mode("append").parquet(target_path)
 
-    q = (
-        stream.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    return drain(stream.writeStream.foreachBatch(enrich), checkpoint_dir, timeout_sec)

@@ -16,8 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from .incremental import read_events_stream
+from .incremental import drain, read_events_stream
 
 
 def view_purchase_attribution(
@@ -82,22 +83,15 @@ def run_view_purchase_attribution(
     checkpoint_dir: str,
     window: str = "1 hour",
     timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the landing dir through the stream-stream join: one
     events stream read ONCE, split into the two logical streams by
     event_type (a view and a purchase side of the same wire), joined
-    and appended to parquet. availableNow = the reference's
-    incremental run; replays are exactly-once via the checkpoint."""
+    and appended to parquet through :func:`drain` (the reference's
+    incremental run); replays are exactly-once via the checkpoint."""
     stream = read_events_stream(spark, landing_dir)
     views = stream.filter(F.col("event_type") == "view")
     purchases = stream.filter(F.col("event_type") == "purchase")
     joined = view_purchase_attribution(views, purchases, window=window)
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", target_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
+    writer = joined.writeStream.format("parquet").option("path", target_path)
+    return drain(writer.outputMode("append"), checkpoint_dir, timeout_sec)

@@ -410,7 +410,8 @@ class TestPlanShapes:
     @pytest.mark.parametrize(
         "name",
         ["mm_png_decode", "mm_gif_decode", "mm_jpeg_decode", "mm_mp4_meta",
-         "mm_video_frames", "mm_mjpeg_frames", "mm_mp3_meta"],
+         "mm_video_frames", "mm_mjpeg_frames", "mm_mp3_meta",
+         "mm_ppm_decode", "mm_wav_decode"],
     )
     def test_media_decode_is_pre_ranged_single_python_pass(
         self, spark, sf_dir, name

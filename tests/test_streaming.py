@@ -36,9 +36,13 @@ class TestIncrementalUpsert:
         overlap = half1.limit(50)  # duplicates across batches
 
         _write_landing(half1, landing)
-        run_incremental_upsert(spark, landing, target, ckpt)
+        q = run_incremental_upsert(spark, landing, target, ckpt)
         got1 = spark.read.parquet(target)
         assert got1.count() == half1.count()
+        # the runner returns its finished query; its per-batch record
+        # accounts for every landed row
+        assert not q.isActive
+        assert sum(p["numInputRows"] for p in q.recentProgress) == half1.count()
 
         _write_landing(half2.unionByName(overlap), landing)
         run_incremental_upsert(spark, landing, target, ckpt)
@@ -56,6 +60,20 @@ class TestIncrementalUpsert:
         n1 = spark.read.parquet(target).count()
         run_incremental_upsert(spark, landing, target, ckpt)  # no new files
         assert spark.read.parquet(target).count() == n1
+
+
+class TestDrain:
+    def test_timeout_stops_the_query_and_raises(self, spark, events, tmp_path):
+        """A drain that outlasts its timeout must not return as if it
+        had finished while its query keeps writing."""
+        landing = str(tmp_path / "landing")
+        events.repartition(8).write.parquet(landing)
+        with pytest.raises(TimeoutError):
+            run_streaming_sessions(
+                spark, landing, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                timeout_sec=0.001,
+            )
+        assert spark.streams.active == []
 
 
 class TestStreamingSessions:
@@ -162,6 +180,7 @@ class TestKafkaShaped:
         from etl_pipelines_spark.streaming import (
             KAFKA_WIRE_SCHEMA,
             decode_events,
+            drain,
             encode_events_to_wire,
             read_kafka_shaped_stream,
         )
@@ -179,14 +198,8 @@ class TestKafkaShaped:
         assert stream.isStreaming
         decoded = decode_events(stream)
         out_dir = str(tmp_path / "out")
-        q = (
-            decoded.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        writer = decoded.writeStream.format("parquet").option("path", out_dir)
+        drain(writer, str(tmp_path / "ck"), 300)
 
         got = spark.read.parquet(out_dir)
         assert got.count() == 500

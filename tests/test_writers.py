@@ -297,6 +297,63 @@ def test_snapshot_idempotent(spark, tmp_table):
     assert days == ["2024-01-01", "2024-01-02"]
 
 
+def test_failed_full_refresh_leaves_no_staging_dir(spark, tmp_table):
+    """A write that raises part-way must remove its staging sibling
+    and leave the old table readable."""
+    full_refresh(spark.createDataFrame([(1, "a")], ["id", "v"]), tmp_table)
+    bad = spark.range(0, 1000, numPartitions=4).withColumn(
+        "v",
+        F.when(F.col("id") == 999, F.raise_error(F.lit("boom"))).otherwise(
+            F.lit("x")
+        ),
+    )
+    with pytest.raises(Exception, match="boom"):
+        full_refresh(bad, tmp_table)
+    parent = os.path.dirname(tmp_table)
+    assert [e for e in os.listdir(parent) if e.endswith(".tmp")] == []
+    assert [tuple(r) for r in spark.read.parquet(tmp_table).collect()] == [(1, "a")]
+
+
+def test_partition_overwrite_is_per_write_on_a_static_session(spark, tmp_path):
+    """snapshot and partitioned upsert overwrite only the partitions
+    they write even on a session whose overwrite mode is static, and
+    leave that session conf as they found it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        snap = str(tmp_path / "snap")
+        df = spark.createDataFrame([(1, "a")], ["id", "v"])
+        snapshot(df, snap, "2024-01-01")
+        snapshot(df, snap, "2024-01-02")
+        days = sorted(
+            str(r.date) for r in spark.read.parquet(snap).select("date").collect()
+        )
+        assert days == ["2024-01-01", "2024-01-02"]
+
+        tbl = str(tmp_path / "tbl")
+        full_refresh(
+            spark.createDataFrame(
+                [(1, "2024-01-01", "old"), (2, "2024-01-02", "keep")],
+                ["id", "d", "v"],
+            ),
+            tbl,
+            partition_by=["d"],
+        )
+        upsert(
+            spark,
+            spark.createDataFrame([(1, "2024-01-01", "new")], ["id", "d", "v"]),
+            tbl,
+            keys=["id"],
+            partition_by=["d"],
+        )
+        got = {r.id: r.v for r in spark.read.parquet(tbl).collect()}
+        assert got == {1: "new", 2: "keep"}
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_schema_evolving_append(spark):
     old = spark.createDataFrame([(1, "a")], ["id", "v"])
     new = spark.createDataFrame([(2, "b", 9.0)], ["id", "v", "extra"])

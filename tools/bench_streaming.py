@@ -3,10 +3,13 @@
 The streaming operators are equivalence-tested against their batch
 twins but had no THROUGHPUT number. This measures events/sec through
 each streaming path at sf0.1 (and sf1 with --sf1), draining a
-multi-file landing directory with trigger(availableNow) — the
-reference's own incremental-run shape — and records per-path state
-rows from the final StreamingQueryProgress so the watermark-bounded
-state claim carries a measured size, not just a green test.
+multi-file landing directory through the engine's own ``run_*``
+runners (``streaming.drain``: trigger(availableNow), the reference's
+incremental-run shape). Only the dedup path has no runner; its writer
+goes through ``drain`` directly. Per-path state rows come from the
+returned query's last StreamingQueryProgress, so the
+watermark-bounded state claim carries a measured size, not just a
+green test.
 
 Writes BENCH_STREAMING.json. Run it ALONE (any concurrent Spark job
 inflates timings 2-4x).
@@ -44,21 +47,8 @@ def prepare_landing(spark: SparkSession, sf_dir: str, landing: str) -> int:
 
 
 def _state_rows(query) -> int | None:
-    prog = query.lastProgress
-    if not prog:
-        return None
-    ops = prog.get("stateOperators") or []
+    ops = (query.lastProgress or {}).get("stateOperators") or []
     return sum(op.get("numRowsTotal", 0) for op in ops) or None
-
-
-def drain(build_writer, timeout_sec: int = 600):
-    """Start an availableNow query, await full drain, return
-    (elapsed_sec, state_rows)."""
-    t0 = time.perf_counter()
-    q = build_writer()
-    q.awaitTermination(timeout_sec)
-    elapsed = time.perf_counter() - t0
-    return elapsed, _state_rows(q)
 
 
 def main() -> None:
@@ -73,139 +63,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from etl_pipelines_spark.streaming.incremental import (
-        deduped,
-        read_events_stream,
-        running_user_stats,
-        streaming_daily_counts,
-        streaming_session_rollup,
-    )
-    from etl_pipelines_spark.streaming.joins import view_purchase_attribution
-    from etl_pipelines_spark.sources import writers
+    from etl_pipelines_spark import streaming as st
 
     work = tempfile.mkdtemp(prefix="bench_stream_")
     landing = os.path.join(work, "landing")
     n_events = prepare_landing(spark, sf_dir, landing)
-
-    def out_paths(name: str):
-        return (
-            os.path.join(work, name, "out"),
-            os.path.join(work, name, "ckpt"),
-        )
-
-    results: dict[str, dict] = {}
-
-    def record(name: str, elapsed: float, state_rows) -> None:
-        results[name] = {
-            "sec": round(elapsed, 3),
-            "events_per_sec": round(n_events / elapsed),
-            "state_rows": state_rows,
-        }
-        print(f"{name}: {results[name]}", file=sys.stderr)
-
-    # 1. watermarked dedup -> parquet append
-    out, ckpt = out_paths("dedup")
-    el, st = drain(
-        lambda: deduped(read_events_stream(spark, landing))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    record("s_dedup_drain", el, st)
-
-    # 2. foreachBatch incremental upsert (delete-insert merge per batch)
-    out, ckpt = out_paths("upsert")
-
-    def upsert_writer():
-        stream = read_events_stream(spark, landing, max_files_per_trigger=4)
-
-        def merge(batch, _bid):
-            writers.upsert(
-                spark, batch.dropDuplicates(["event_id"]), out, ["event_id"]
-            )
-
-        return (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    el, st = drain(upsert_writer)
-    record("s_incremental_upsert", el, st)
-
-    # 3. session_window rollup
-    out, ckpt = out_paths("sessions")
-    el, st = drain(
-        lambda: streaming_session_rollup(read_events_stream(spark, landing))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    record("s_session_rollup", el, st)
-
-    # 4. tumbling daily windows
-    out, ckpt = out_paths("daily")
-    el, st = drain(
-        lambda: streaming_daily_counts(read_events_stream(spark, landing))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    record("s_daily_windows", el, st)
-
-    # 5. stream-stream interval join (view -> purchase attribution)
-    out, ckpt = out_paths("ssjoin")
-
-    def ssjoin_writer():
-        stream = read_events_stream(spark, landing)
-        joined = view_purchase_attribution(
-            stream.filter(F.col("event_type") == "view"),
-            stream.filter(F.col("event_type") == "purchase"),
-        )
-        return (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    el, st = drain(ssjoin_writer)
-    record("s_stream_stream_join", el, st)
-
-    # 6. applyInPandasWithState running stats
-    out, ckpt = out_paths("stateful")
-
-    def stateful_writer():
-        stats = running_user_stats(read_events_stream(spark, landing))
-
-        def sink(batch, _bid):
-            batch.write.mode("append").parquet(out)
-
-        return (
-            stats.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    el, st = drain(stateful_writer)
-    record("s_stateful_running_stats", el, st)
-
-    # 7. stream-static enrichment (dim re-read per micro-batch)
-    out, ckpt = out_paths("enriched")
     dim_path = os.path.join(work, "dim")
     (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -214,24 +76,37 @@ def main() -> None:
         .write.mode("overwrite").parquet(dim_path)
     )
 
-    def enriched_writer():
-        stream = read_events_stream(spark, landing)
+    def dedup(spark, landing, out, ckpt):
+        stream = st.deduped(st.read_events_stream(spark, landing))
+        writer = stream.writeStream.format("parquet").option("path", out)
+        return st.drain(writer.outputMode("append"), ckpt, 300)
 
-        def enrich(batch, _bid):
-            dim = batch.sparkSession.read.parquet(dim_path)
-            batch.join(F.broadcast(dim), "user_id", "left").write.mode(
-                "append"
-            ).parquet(out)
-
-        return (
-            stream.writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    el, st = drain(enriched_writer)
-    record("s_enriched_append", el, st)
+    paths = [
+        ("s_dedup_drain", dedup),
+        ("s_incremental_upsert", st.run_incremental_upsert),
+        ("s_session_rollup", st.run_streaming_sessions),
+        ("s_daily_windows", st.run_streaming_daily_counts),
+        ("s_stream_stream_join", st.run_view_purchase_attribution),
+        ("s_stateful_running_stats", st.run_running_user_stats),
+        (
+            "s_enriched_append",
+            lambda spark, landing, out, ckpt: st.run_enriched_append(
+                spark, landing, dim_path, out, ckpt
+            ),
+        ),
+    ]
+    results: dict[str, dict] = {}
+    for name, run in paths:
+        out, ckpt = os.path.join(work, name, "out"), os.path.join(work, name, "ckpt")
+        t0 = time.perf_counter()
+        q = run(spark, landing, out, ckpt)
+        elapsed = time.perf_counter() - t0
+        results[name] = {
+            "sec": round(elapsed, 3),
+            "events_per_sec": round(n_events / elapsed),
+            "state_rows": _state_rows(q),
+        }
+        print(f"{name}: {results[name]}", file=sys.stderr)
 
     shutil.rmtree(work, ignore_errors=True)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -243,7 +118,8 @@ def main() -> None:
         "sf": sf,
         "queries": results,
         "note": (
-            "availableNow drain of a multi-file parquet landing dir; "
+            "availableNow drain of a multi-file parquet landing dir "
+            "through the engine's run_* runners (dedup: streaming.drain); "
             "state_rows = final StreamingQueryProgress numRowsTotal "
             "(watermark-bounded by construction, tested in "
             "tests/test_streaming.py)"
